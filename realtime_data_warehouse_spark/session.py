@@ -8,6 +8,14 @@ hash-stable against the DuckDB oracle (reference pins +08:00 in
 DateFormatUtil.java:21; we pin UTC — the fixed-zone requirement is
 what matters, not the zone itself).
 
+The driver heap is sized to the host: a quarter of physical memory
+(or of the cgroup limit, when lower), floored at Spark's 1g default
+and capped at 48g; `SPARK_GRAFT_DRIVER_MEM` overrides it verbatim. In
+local mode that one JVM also hosts the executors, while the Python
+workers, pytest and DuckDB share the rest of the host; a heap sized
+past physical memory lets the kernel's OOM killer end the JVM
+mid-run, which shows as a run of Py4J `ConnectionRefusedError`s.
+
 On a real cluster the same builder applies; only master/memory
 change. Every operator in this package is written against the
 multi-executor model (no driver-side collect loops, broadcast for
@@ -26,6 +34,35 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+#: cgroup v2 and v1 memory limits; either may be absent or "max".
+_CGROUP_MEMORY_LIMITS = ("/sys/fs/cgroup/memory.max",
+                         "/sys/fs/cgroup/memory/memory.limit_in_bytes")
+
+
+def _physical_memory_bytes() -> int:
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            total = min(total, int(limit))
+    return total
+
+
+def default_driver_memory() -> str:
+    """`spark.driver.memory` for this host: `SPARK_GRAFT_DRIVER_MEM`
+    verbatim when set, else 25% of physical memory in whole MiB (the
+    JVM's own MaxRAMPercentage default), within [1g, 48g]."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    mib = _physical_memory_bytes() // 4 // 2**20
+    return f"{min(max(mib, 1024), 48 * 1024)}m"
+
+
 def get_spark(app_name: str = "realtime_data_warehouse_spark",
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession."""
@@ -40,7 +77,7 @@ def get_spark(app_name: str = "realtime_data_warehouse_spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         # The driver testdata has shipped events.ts BOTH as INT64
         # TIMESTAMP(NANOS) (rounds 1-2) and as timestamp[us] (round 3).
