@@ -12,12 +12,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# F1 — map element access `data['id']` (DwdTradeCartAdd.java:30)
-def map_get(map_col: str | Column, key: str) -> Column:
-    c = F.col(map_col) if isinstance(map_col, str) else map_col
-    return F.element_at(c, key)
-
-
 # F3 — if(cond, a, b) (DwdTradeCartAdd.java:34)
 def iff(cond: Column, a: Column, b: Column) -> Column:
     return F.when(cond, a).otherwise(b)
@@ -32,21 +26,6 @@ def fmt_datetime(ts: Column) -> Column:
     return F.date_format(ts, "yyyy-MM-dd HH:mm:ss")
 
 
-def fmt_partition(ts: Column) -> Column:
-    """`yyyyMMdd` partition stamp (DateFormatUtil.java:55-59)."""
-    return F.date_format(ts, "yyyyMMdd")
-
-
-# F5/F10 — epoch↔timestamp normalization (SQLUtil.java:26,
-# DwsTradeSkuOrderWindow.java:234: topic_db ts is seconds, topic_log ms)
-def ts_millis(epoch_ms: Column) -> Column:
-    return F.timestamp_millis(epoch_ms)
-
-
-def ts_seconds(epoch_s: Column) -> Column:
-    return F.timestamp_seconds(epoch_s)
-
-
 # F12 — composite key (DwsTrafficVcChArIsNewPageViewWindow.java:103).
 # Kept for API parity; grouping keeps separate columns instead of a
 # concatenated string key — Spark group-by keys are already composite.
@@ -54,19 +33,8 @@ def composite_key(*cols: str, sep: str = ":") -> Column:
     return F.concat_ws(sep, *[F.col(c) for c in cols])
 
 
-# F13 — CSV split (DimApp.java:82)
-def csv_split(c: str | Column) -> Column:
-    col = F.col(c) if isinstance(c, str) else c
-    return F.split(col, ",")
-
-
-# F14 — JSON parse/serialize + snake_case re-serialization
-# (DorisMapFunction.java:8-15). snake_case is a column-naming
-# convention in this engine; to_json(struct(...)) serializes.
-def to_snake_json(*cols: str) -> Column:
-    return F.to_json(F.struct(*[F.col(c) for c in cols]))
-
-
+# F14 — snake_case re-serialization (DorisMapFunction.java:8-15):
+# snake_case is a column-naming convention in this engine.
 def snake_case(name: str) -> str:
     """camelCase → snake_case (JdbcUtil.java:57-59 analogue)."""
     out = []

@@ -70,24 +70,6 @@ def tumble(df: DataFrame, ts_col: str, duration: str,
     return stamp_window_bounds(out) if stamp else out
 
 
-def distinct_set_agg(df: DataFrame, keys: list[str], set_col: str,
-                     sum_cols: Mapping[str, Column],
-                     count_alias: str = "order_count",
-                     exact: bool = True) -> DataFrame:
-    """A3 — per-key sum + distinct-id count
-    (DwsTradeProvinceOrderWindow.java:117-145 keeps a Set<String> of
-    order ids and emits set.size). Exact mode = count_distinct —
-    unlike the reference's in-memory Set this is a shuffle-based
-    exact distinct that scales; at 100 TB switch exact=False for
-    approx_count_distinct (HLL, no second shuffle)."""
-    counter = (
-        F.count_distinct(F.col(set_col)) if exact
-        else F.approx_count_distinct(F.col(set_col))
-    )
-    aggs = [c.alias(name) for name, c in sum_cols.items()]
-    return df.groupBy(*keys).agg(counter.alias(count_alias), *aggs)
-
-
 def session_agg(df: DataFrame, ts_col: str, gap: str, keys: list[str],
                 aggs: Mapping[str, Column]) -> DataFrame:
     """Session-window aggregation — events of one key belong to the
@@ -342,21 +324,30 @@ def quantile_bucket_expr(value_col: str, bounds: dict, keys: Sequence[str],
     by the histogram and bracket passes (the filter must reuse the
     IDENTICAL expression so no float-boundary row falls between them)
     and exposed so callers can ride their own aggregates on the same
-    scans (see two_pass_exact_quantile docstring)."""
+    scans (see two_pass_exact_quantile docstring).
+
+    NULL values bucket to NULL (least() would otherwise skip the NULL
+    and file them under the top bucket), so they carry no rank in
+    either pass; a group whose bounds are None (no non-null value, or
+    an empty ungrouped input) gets no bucket at all."""
     keys = list(keys)
     v = F.col(value_col).cast("double")
 
     def bucket_expr(lo: float, hi: float):
         span = (hi - lo) or 1.0
-        return F.least(F.lit(n_buckets - 1),
-                       F.floor((v - F.lit(lo)) / F.lit(span)
-                               * F.lit(n_buckets)).cast("long"))
+        return F.when(v.isNotNull(), F.least(
+            F.lit(n_buckets - 1),
+            F.floor((v - F.lit(lo)) / F.lit(span)
+                    * F.lit(n_buckets)).cast("long")))
 
     if not keys:
         lo, hi, _n = bounds[()]
-        return bucket_expr(lo, hi)
+        return (F.lit(None).cast("long") if lo is None
+                else bucket_expr(lo, hi))
     bexpr = None
     for gk, (lo, hi, _n) in bounds.items():
+        if lo is None:
+            continue
         cond = None
         for kcol, kval in zip(keys, gk):
             c = F.col(kcol) == F.lit(kval)
@@ -364,7 +355,7 @@ def quantile_bucket_expr(value_col: str, bounds: dict, keys: Sequence[str],
         be = bucket_expr(lo, hi)
         bexpr = be if bexpr is None else F.when(cond, be).otherwise(bexpr)
         # build nested whens so each group uses its own bounds
-    return F.lit(0).cast("long") if bexpr is None else bexpr
+    return F.lit(None).cast("long") if bexpr is None else bexpr
 
 
 def quantile_multi_bracket(df: DataFrame, value_col: str,
@@ -386,8 +377,7 @@ def quantile_multi_bracket(df: DataFrame, value_col: str,
         n = bounds[gk][2]
         if not n:  # group with zero non-null values: no quantile exists
             continue
-        # all-NULL values bucket to NULL in the histogram — they carry
-        # no rank, and a None bucket id would break sorted() below
+        # NULL values bucket to NULL in the histogram: they carry no rank
         sbl = sorted((b, c) for b, c in bl if b is not None)
         for qq in qs:
             want = max(1, math.ceil(qq * n))
@@ -499,13 +489,19 @@ def two_pass_exact_quantile(df: DataFrame, value_col: str,
     targets = {}  # group -> (bucket, remaining_rank)
     for gk, bl in per_group.items():
         n = bounds[gk][2]
+        if not n:
+            continue
         k = max(1, math.ceil(q * n))
         below = 0
-        for b, c in sorted(bl):
+        for b, c in sorted((b, c) for b, c in bl if b is not None):
             if below + c >= k:
                 targets[gk] = (b, k - below)
                 break
             below += c
+
+    out_cols = [*keys, v.alias(f"{value_col}_q")]
+    if not targets:  # empty input (or only all-NULL groups)
+        return df.select(*out_cols).limit(0)
 
     # pass 2 — bracket rows only, bounded per-group sort
     cond = None
@@ -526,5 +522,4 @@ def two_pass_exact_quantile(df: DataFrame, value_col: str,
         bracket.withColumn("__rn", F.row_number().over(w.orderBy(v)))
         .filter(F.col("__rn") == F.col("__target_rank"))
     )
-    out_cols = [*keys, v.alias(f"{value_col}_q")]
     return picked.select(*out_cols)

@@ -99,17 +99,6 @@ def token_ngrams(toks_col, n: int = 2):
     )
 
 
-def word_ngrams(text_col, n: int = 2):
-    """Distinct word n-gram shingles of a text column.
-
-    PERF: inlines the tokenizer into the per-gram lambda, and HOF
-    lambdas are interpreted without common-subexpression elimination —
-    every gram re-runs the regex split (~20× slower than the two-step
-    plan). Prefer with_shingles, which materializes the token array in
-    its own projection first."""
-    return token_ngrams(tokenize(text_col), n)
-
-
 def with_shingles(df: DataFrame, text_col: str = "text", n: int = 2,
                   out_col: str = "shingles", drop_empty: bool = False) -> DataFrame:
     """Tokenize into a materialized column, then shingle that array —
@@ -402,10 +391,11 @@ def band_keys(shingled: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, shingles) → (id, band_idx, band_key): the banded-minhash
     bucket keys every LSH consumer joins on. Factored out of
     lsh_candidates so batch self-join dedup and the streaming ingest
-    gate (plans/round6b.stream_neardup_gate — which joins ARRIVING
-    docs against a STORED corpus band index) derive buckets from one
-    expression; a drift in banding (_BANDS/_ROWS_PER_BAND, hash seed)
-    would silently empty the stream-vs-index join otherwise."""
+    gate (plans/streaming_queries.stream_neardup_gate — which joins
+    ARRIVING docs against a STORED corpus band index) derive buckets
+    from one expression; a drift in banding (_BANDS/_ROWS_PER_BAND,
+    hash seed) would silently empty the stream-vs-index join
+    otherwise."""
     sig = shingled.withColumn("sig", minhash_signature(F.col("shingles")))
     # one parsed expr instead of 32 xxhash64(...) Column builds — the
     # banding is pure SQL either way; this trims ~0.2 s of driver-side

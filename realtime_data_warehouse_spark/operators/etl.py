@@ -117,13 +117,6 @@ def prune_map_by_config(df: DataFrame, sink_columns_col: str = "sink_columns",
     )
 
 
-def select_by_config(df: DataFrame, columns_csv: str) -> DataFrame:
-    """Static-config variant: build the select list once per
-    micro-batch from the config string (SURVEY §4 custom piece #2)."""
-    wanted = [c.strip() for c in columns_csv.split(",") if c.strip()]
-    return df.select(*wanted)
-
-
 # ---------------------------------------------------------------------------
 # P8 — stream split (DwdBaseLog.java:82-135): one parsed log stream
 # routed to err / start / display / action / page outputs.

@@ -16,33 +16,6 @@ from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# J1 — multi-way fact join (DwdTradeOrderDetail.java:68-92)
-# ---------------------------------------------------------------------------
-
-def order_wide_join(detail: DataFrame, order: DataFrame,
-                    activity: DataFrame | None = None,
-                    coupon: DataFrame | None = None,
-                    detail_key: str = "order_id",
-                    detail_id: str = "id") -> DataFrame:
-    """order_detail ⋈ order_info ⟕ activity ⟕ coupon.
-
-    Batch mode is exact (the reference bounds its state with a 5s TTL
-    only to cap memory — semantics are the full join). The two left
-    sides are per-detail-id attachments. At scale: detail×order is
-    the one real shuffle (both sides large, co-partitioned on
-    order_id by the exchange); activity/coupon are small and
-    broadcast."""
-    out = detail.join(order, detail_key, "inner")
-    if activity is not None:
-        out = out.join(F.broadcast(activity), out[detail_id] == activity["order_detail_id"], "left") \
-                 .drop("order_detail_id")
-    if coupon is not None:
-        out = out.join(F.broadcast(coupon), out[detail_id] == coupon["order_detail_id"], "left") \
-                 .drop("order_detail_id")
-    return out
-
-
-# ---------------------------------------------------------------------------
 # J2 — interval join (DwdTradeOrderPaySucDetail.java:123-148)
 # ---------------------------------------------------------------------------
 
@@ -83,28 +56,6 @@ def lookup_join(fact: DataFrame, dim: DataFrame, on, how: str = "left",
     the broadcast itself — SURVEY §1.1)."""
     d = dim.select(*projected) if projected else dim
     return fact.join(F.broadcast(d), on, how)
-
-
-# ---------------------------------------------------------------------------
-# J4 — broadcast config routing join (DimApp.java:52-100)
-# ---------------------------------------------------------------------------
-
-def config_routing_join(stream: DataFrame, config: DataFrame,
-                        stream_keys: Sequence[str] = ("table",),
-                        config_keys: Sequence[str] = ("source_table",)) -> DataFrame:
-    """connect + broadcast state ≈ inner join with broadcast(config):
-    a record survives iff its (table[, type]) has a config entry, and
-    comes out paired with that entry's routing columns. Config is
-    re-read per micro-batch upstream, giving the reference's
-    "latest config wins" (DimBroadcastFunction.java:17-93)."""
-    cond = None
-    for s_k, c_k in zip(stream_keys, config_keys):
-        clause = stream[s_k] == config[c_k]
-        cond = clause if cond is None else (cond & clause)
-    out = stream.join(F.broadcast(config), cond, "inner")
-    for c_k in config_keys:
-        out = out.drop(config[c_k])
-    return out
 
 
 # ---------------------------------------------------------------------------

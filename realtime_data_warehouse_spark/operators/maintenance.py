@@ -10,6 +10,7 @@ container, see README "Delta/Iceberg attempts").
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 from pyspark.sql import SparkSession
@@ -103,9 +104,19 @@ def parquet_layout(table_dir: str) -> dict:
 #: never binds; on a small SF it stops row-light tables (a 5-row dim)
 #: from being shredded into one file per core while still letting a
 #: row-heavy-but-well-compressed fact reach cluster-wide scan
-#: parallelism. Env-overridable, local default measured at sf0.1.
-DEFAULT_MIN_FILE_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_MIN_FILE_BYTES", 64 * 1024))
+#: parallelism. Measured at sf0.1.
+DEFAULT_MIN_FILE_BYTES = 64 * 1024
+
+_BYTE_UNITS = {"": 1, "k": 2**10, "m": 2**20, "g": 2**30}
+
+
+def parse_bytes(size: str) -> int:
+    """A Spark byte-size string (`134217728b`, `256m`, `1gb`) in bytes;
+    a bare number is bytes."""
+    m = re.fullmatch(r"(\d+)\s*([kmg]?)b?", size.strip().lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {size!r}")
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
 
 
 def desired_files(total_bytes: int, parallelism: int,
@@ -190,12 +201,8 @@ def maintain_table(spark: SparkSession, table_dir: str,
     if parallelism is None:
         parallelism = spark.sparkContext.defaultParallelism
     if target_split_bytes is None:
-        raw = spark.conf.get("spark.sql.files.maxPartitionBytes",
-                             str(128 * 1024 * 1024))
-        try:  # set in plain bytes by tune_for_scale; default has a 'b'
-            target_split_bytes = int(raw.lower().rstrip("b"))
-        except ValueError:
-            target_split_bytes = 128 * 1024 * 1024
+        target_split_bytes = parse_bytes(spark.conf.get(
+            "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)))
     _recover_table(table_dir)
     if not needs_compaction(table_dir, parallelism,
                             target_split_bytes, min_file_bytes):

@@ -995,3 +995,80 @@ def touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("conversions"),
              F.sum("value").cast("double").alias("attributed_revenue"))
     )
+
+
+@register(
+    "scd2_changes_since",
+    # same change model as stream_scd2_dim_history / the batch twin;
+    # the predicate is the SCD2 range-scan the manifest stats serve:
+    # "every version created at or after ts 1" (tombstones included —
+    # a changes-feed consumer needs the closes too)
+    oracle="""
+    WITH chg AS (
+        SELECT p_partkey, p_size, 0 AS ts, 'bootstrap-insert' AS typ FROM part
+        UNION ALL
+        SELECT p_partkey, p_size * 2, 1, 'update'
+        FROM part WHERE p_partkey % 10000 < 500
+        UNION ALL
+        SELECT p_partkey, NULL, 2, 'delete'
+        FROM part WHERE p_partkey % 1000 = 7
+    ), v AS (
+        SELECT p_partkey, p_size, ts, typ,
+               lead(ts) OVER (PARTITION BY p_partkey ORDER BY ts) AS valid_to
+        FROM chg
+    )
+    SELECT p_partkey, p_size, ts AS valid_from, valid_to, typ
+    FROM v WHERE ts >= 1
+    """,
+)
+def scd2_changes_since(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SCD2 "changes since ts" feed through MANIFEST-STATS
+    pruning (on the driver-checked surface): the
+    same streamed CDC replay as stream_scd2_dim_history maintains the
+    bucketed history table — whose manifest carries per-file
+    valid_from min/max envelopes, gathered at commit from the same
+    footer open that counts rows — and the read goes through
+    merge_table.read_pruned, which opens ONLY the files whose
+    envelope reaches ts >= 1 (bootstrap-only buckets skip) and
+    applies the residual row filter. Hash-matching the full-history
+    SQL twin proves the prune is an upper bound, never a row drop —
+    the correctness side of SCALING Reading 17's bytes-read
+    measurement."""
+    import os
+    import tempfile
+
+    from ..streaming.merge_table import read_pruned
+    from ..streaming.runner import run_foreach_batch, staged_files_dir
+    from ..streaming.sinks import scd2_merge_batch
+    from .streaming_queries import _stage_once
+
+    part = load_table(spark, sf_dir, "part")
+    chg = changelog(part, "sku_info", "p_partkey", None, "p_size",
+                    with_deletes=True)
+    rows = chg.select(
+        F.col("data")["p_partkey"].cast("long").alias("p_partkey"),
+        F.when(F.col("type") == "delete", F.lit(None).cast("int"))
+         .otherwise(F.col("data")["p_size"].cast("int")).alias("p_size"),
+        F.col("ts").cast("int").alias("valid_from"),
+        F.col("type").alias("typ"),
+    )
+    in_dir = _stage_once(
+        sf_dir, "scd2_changelog",
+        lambda base: staged_files_dir(rows, base, n_files=3,
+                                      order_col="valid_from"),
+    )
+    rundir = tempfile.mkdtemp(prefix="rdw_r11_scd2since_")
+    table_dir = os.path.join(rundir, "history")
+    sdf = (
+        spark.readStream.schema(rows.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(in_dir)
+    )
+    run_foreach_batch(
+        sdf,
+        scd2_merge_batch(table_dir, "p_partkey"),
+        checkpoint_dir=os.path.join(rundir, "ck"),
+        output_mode="append",
+    )
+    return read_pruned(spark, table_dir, "valid_from", lo=1).select(
+        "p_partkey", "p_size", "valid_from", "valid_to", "typ")

@@ -32,6 +32,8 @@ containment dedup the Jaccard family can't express. Shapes:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1039,4 +1041,346 @@ def exact_median_price_two_pass(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "l_returnflag",
         F.col("l_extendedprice_q").alias("median_price"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Sketch-accuracy gates
+# ---------------------------------------------------------------------------
+
+# The approximate operators (GK quantile sketch, HLL++ distinct count,
+# Misra-Gries heavy hitters) are measured against the exact operator
+# IN-ENGINE with exact arithmetic, and the oracle gates the measurement.
+# An estimate can never hash-match a foreign engine (DuckDB's
+# approx_quantile is t-digest, not GK; its HLL seeds differ), so the
+# oracle pins what IS portable — the exact quantiles, the exact counts
+# and the acceptance boolean, which it asserts TRUE: a sketch that lands
+# outside its own published bound turns the entry red. This is the
+# certificate a 100 TB deployment needs before swapping
+# percentile_revenue's full shuffle (SHUFFLE.md: the repo's only
+# full-data shuffle) for `sketch_quantiles_distinct`.
+
+_QS = (0.5, 0.9, 0.99)
+
+#: Spark approx_percentile accuracy knob → Greenwald-Khanna rank-error
+#: guarantee eps = 1/accuracy (relative rank error, HARD bound).
+_ACCURACY = 10_000
+
+_EPS = 1.0 / _ACCURACY
+
+_SKETCH_Q_ORACLE = f"""
+    WITH g AS (
+        SELECT l_returnflag, 0.5 AS q,
+               CAST(count(*) AS BIGINT) AS n,
+               CAST(quantile_disc(l_extendedprice, 0.5) AS DOUBLE) AS exact_q
+        FROM lineitem GROUP BY 1
+        UNION ALL
+        SELECT l_returnflag, 0.9,
+               CAST(count(*) AS BIGINT),
+               CAST(quantile_disc(l_extendedprice, 0.9) AS DOUBLE)
+        FROM lineitem GROUP BY 1
+        UNION ALL
+        SELECT l_returnflag, 0.99,
+               CAST(count(*) AS BIGINT),
+               CAST(quantile_disc(l_extendedprice, 0.99) AS DOUBLE)
+        FROM lineitem GROUP BY 1
+    )
+    SELECT l_returnflag, CAST(q AS DOUBLE) AS q, n,
+           CAST({_EPS} AS DOUBLE) AS eps_bound,
+           exact_q,
+           TRUE AS within_bound
+    FROM g
+"""
+
+
+@register("sketch_quantile_error", oracle=_SKETCH_Q_ORACLE)
+def sketch_quantile_error(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quantile-sketch acceptance gate: Spark's approx_percentile
+    (Greenwald-Khanna summary, accuracy=10000 ⇒ rank error ≤ εn with
+    ε = 1e-4) measured against the exact discrete quantile per
+    (l_returnflag, q) — the check a 100 TB deployment runs once per
+    corpus before trusting `sketch_quantiles_distinct` in place of
+    `percentile_revenue`'s full shuffle.
+
+    The comparison arithmetic is EXACT even though the sketch isn't:
+    the estimate's true rank interval is [count(v < est)+1,
+    count(v ≤ est)] (one exact conditional-count scan — the estimate
+    is a real data value, so the interval is non-empty), and the
+    sketch passes iff that interval intersects the allowed window
+    [⌊(q−ε)n⌋−2, ⌈(q+ε)n⌉+2] (±2 rank slack: the GK target-rank
+    convention and quantile_disc's ⌈qn⌉ differ by up to a rank on
+    each side — measured below, the sketch spends its FULL εn budget,
+    so the slack matters). `exact_q` itself comes from
+    operators/agg.two_pass_exact_quantile — the no-global-sort exact
+    plan — and hash-matches DuckDB quantile_disc; `within_bound` is
+    asserted TRUE by the oracle, so a bound violation turns the entry
+    red instead of hiding in a rows-only check.
+
+    MEASURED (this box, scripts-free dev run, both driver SFs): the
+    GK summary is not "usually much better than ε" on this data — it
+    rides the bound. sf0.01 (~20k rows/group): worst observed rank
+    error 2 rows ≈ 1.0e-4 relative (εn = 2.0 — 100% of budget);
+    sf0.1 (~200k rows/group): worst 19 rows ≈ 9.5e-5 (εn = 20).
+    That is exactly what the εn guarantee promises and no more —
+    the number a 100 TB deployment needs before swapping
+    percentile_revenue's full shuffle for the sketch: p99 revenue
+    from the sketch can sit a full 0.01% of ranks off. Driver-side
+    work is model-parameter-sized throughout (9 scalar estimates +
+    9 count pairs + 9 exact values), same contract as
+    two_pass_exact_quantile/kmeans_train.
+
+    Scale: THREE scans total (every q-independent aggregate rides a
+    shared scan): (1) sketch +
+    group sizes + the exact-quantile min/max bounds in one aggregate;
+    (2) the exact-quantile histogram + the conditional counts around
+    each estimate in one aggregate (the per-(group, bucket) rows
+    carry the lt/le partials, summed per group driver-side — ≤
+    |groups|·n_buckets rows, model-parameter-sized); (3) the bracket
+    pass, via the same agg.quantile_multi_bracket the public two-pass
+    operator composes (identical bucket expression, identical rank
+    convention, so exact_q is byte-unchanged). All map-side partials,
+    no full-data shuffle; at 100 TB this is the cheap certification
+    that amortizes over every subsequent sketch query."""
+    from ..operators.agg import quantile_bucket_expr, quantile_multi_bracket
+
+    li = load_table(spark, sf_dir, "lineitem")
+    v = F.col("l_extendedprice").cast("double")
+
+    # scan 1 — the sketch under test + exact group sizes + the
+    # two-pass quantile's min/max bounds (one aggregate)
+    stats = li.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.approx_percentile(
+            v, F.array(*[F.lit(q) for q in _QS]), F.lit(_ACCURACY)
+        ).alias("ests"),
+        F.min(v).alias("lo"),
+        F.max(v).alias("hi"),
+        # count(v), not count(*): the two-pass rank convention counts
+        # non-null values (identical here — no nulls — but kept exact)
+        F.count(v).alias("nv"),
+    ).collect()
+    n_of = {r["l_returnflag"]: r["n"] for r in stats}
+    est_of = {(r["l_returnflag"], q): float(r["ests"][i])
+              for r in stats for i, q in enumerate(_QS)}
+    bounds = {(r["l_returnflag"],): (r["lo"], r["hi"], r["nv"])
+              for r in stats}
+
+    # scan 2 — the exact-quantile histogram AND the conditional
+    # counts around each estimate, one aggregate keyed
+    # (group, bucket). The estimates ride in as a BROADCAST-joined
+    # frame, not a chained CASE expression: expression depth stays
+    # O(1) in the number of groups; the lt/le
+    # sums come back as per-bucket partials and fold per group on the
+    # driver — same totals as the old dedicated scan.
+    ests_df = spark.createDataFrame(
+        [(flag,) + tuple(est_of[(flag, q)] for q in _QS)
+         for flag in sorted(n_of)],
+        "l_returnflag string, " + ", ".join(
+            f"e{int(q * 100)} double" for q in _QS),
+    )
+    aggs = [F.count(F.lit(1)).alias("c")]
+    for q in _QS:
+        e = F.col(f"e{int(q * 100)}")
+        aggs.append(F.sum((v < e).cast("long"))
+                    .alias(f"lt_{int(q * 100)}"))
+        aggs.append(F.sum((v <= e).cast("long"))
+                    .alias(f"le_{int(q * 100)}"))
+    bexpr = quantile_bucket_expr("l_extendedprice", bounds,
+                                 ["l_returnflag"])
+    hist = (li.join(F.broadcast(ests_df), "l_returnflag")
+            .withColumn("__b", bexpr)
+            .groupBy("l_returnflag", "__b").agg(*aggs).collect())
+    per_group: dict[tuple, list] = {}
+    counts: dict[str, dict] = {}
+    for r in hist:
+        per_group.setdefault((r["l_returnflag"],), []).append(
+            (r["__b"], r["c"]))
+        acc = counts.setdefault(r["l_returnflag"], {})
+        for q in _QS:
+            for p in ("lt", "le"):
+                k = f"{p}_{int(q * 100)}"
+                acc[k] = acc.get(k, 0) + r[k]
+
+    # scan 3 — the bracket pass (shared two-pass machinery)
+    exact_of = {}
+    for r in quantile_multi_bracket(
+            li, "l_extendedprice", list(_QS), ["l_returnflag"],
+            1024, bounds, per_group).collect():
+        exact_of[(r["l_returnflag"], r["q"])] = float(r["l_extendedprice_q"])
+
+    rows = []
+    for flag, n in sorted(n_of.items()):
+        for q in _QS:
+            lo_r = max(1, math.floor((q - _EPS) * n) - 2)
+            hi_r = min(n, math.ceil((q + _EPS) * n) + 2)
+            cnt_lt = int(counts[flag][f"lt_{int(q * 100)}"])
+            cnt_le = int(counts[flag][f"le_{int(q * 100)}"])
+            within = (cnt_lt + 1) <= hi_r and cnt_le >= lo_r
+            rows.append((flag, float(q), int(n), _EPS,
+                         exact_of[(flag, q)], bool(within)))
+    return spark.createDataFrame(
+        rows, "l_returnflag string, q double, n long, eps_bound double, "
+              "exact_q double, within_bound boolean")
+
+
+_RSD = 0.05  # Spark approx_count_distinct default relative std-dev
+
+_HLL_ERR_ORACLE = f"""
+    SELECT l_returnflag, 'l_orderkey' AS key_col,
+           CAST(count(DISTINCT l_orderkey) AS BIGINT) AS exact_distinct,
+           CAST({_RSD} AS DOUBLE) AS rsd_bound,
+           TRUE AS within_5rsd
+    FROM lineitem GROUP BY 1
+    UNION ALL
+    SELECT l_returnflag, 'l_partkey',
+           CAST(count(DISTINCT l_partkey) AS BIGINT),
+           CAST({_RSD} AS DOUBLE), TRUE
+    FROM lineitem GROUP BY 1
+"""
+
+
+@register("hll_error_report", oracle=_HLL_ERR_ORACLE)
+def hll_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct-count-sketch acceptance gate — the HLL side of the
+    sketch-error pair (see sketch_quantile_error): Spark's
+    approx_count_distinct (HyperLogLog++, default rsd = 0.05)
+    measured against the exact distinct count per (l_returnflag,
+    key column), gated at 5·rsd. The gate is deliberately WIDER than
+    the 3σ band: 3·rsd is a probabilistic (~99.7%) bound for HLL++,
+    not a hard guarantee, so a legitimate ~0.3%-per-cell tail
+    exceedance on a new scale factor or key column would turn the
+    parity entry red with no code defect; 5·rsd
+    (~5σ, false-red ≈ 6e-7/cell) keeps the acceptance boolean in the
+    hash-matched contract while making a red entry mean a real
+    defect. Unlike the GK quantile sketch, the
+    HLL estimate is ORDER-INDEPENDENT (register-wise max merges), so
+    the measured error is a property of (data, rsd) alone and is
+    reproducible across partitionings — but still engine-specific
+    (seed/hash), so the oracle pins the exact counts and asserts the
+    acceptance boolean TRUE, same contract as the quantile gate.
+
+    MEASURED (this box, both driver SFs, rsd = 0.05 ⇒ 5σ gate 25%):
+    worst observed relative error 8.6% (sf0.01 flag N, l_orderkey)
+    and 6.4% (sf0.1 flag R) — ~1.7σ, inside the gate but far from
+    free: the A3 exact-distinct window (`dws_province_order_window`)
+    and the HLL twin (`hll_rollup_daily_uv`) can legitimately differ
+    by several percent at the default sketch size. rsd = 0.02
+    (4× the sketch memory) measured 3.3% worst — the knob a 100 TB
+    deployment turns when single-digit-percent UV accuracy matters.
+
+    Scale: one scan, map-side partial sketches, O(groups · 2^p)
+    state — the same shape as the production rollup; the exact twin
+    costs a distinct-shuffle and exists to certify, not to serve."""
+    li = load_table(spark, sf_dir, "lineitem")
+    base = li.groupBy("l_returnflag").agg(
+        F.countDistinct("l_orderkey").alias("xo"),
+        F.approx_count_distinct("l_orderkey", _RSD).alias("ao"),
+        F.countDistinct("l_partkey").alias("xp"),
+        F.approx_count_distinct("l_partkey", _RSD).alias("ap"),
+    )
+    # Measured dead end (do not retry): unpivoting ONE 4-agg
+    # aggregate with stack() — on the theory that the union re-executes
+    # the subtree — read 2.25 s vs this form's 1.30 (min-of-5
+    # interleaved). Column pruning splits the union into two LIGHTER
+    # aggregates (each Expand covers one distinct column), which beats
+    # a single wide multi-distinct Expand.
+
+    def side(key_col: str, exact: str, approx: str) -> DataFrame:
+        return base.select(
+            "l_returnflag",
+            F.lit(key_col).alias("key_col"),
+            F.col(exact).cast("long").alias("exact_distinct"),
+            F.lit(_RSD).cast("double").alias("rsd_bound"),
+            (F.abs(F.col(approx) - F.col(exact))
+             <= 5 * _RSD * F.col(exact)).alias("within_5rsd"),
+        )
+
+    return side("l_orderkey", "xo", "ao").unionByName(
+        side("l_partkey", "xp", "ap"))
+
+
+_HH_K = 64  # summary capacity; certification threshold = n/(k+1)
+
+_HH_ORACLE = f"""
+    WITH toks AS (
+        SELECT unnest(list_filter(
+            string_split_regex(lower(text), '[^a-z0-9]+'),
+            t -> t <> '')) AS token
+        FROM documents
+    ), tot AS (SELECT count(*) AS n FROM toks)
+    SELECT token, CAST(count(*) AS BIGINT) AS cnt
+    FROM toks, tot
+    GROUP BY token, n
+    HAVING count(*) > n / {_HH_K + 1}.0
+"""
+
+
+@register("heavy_hitters_exact", oracle=_HH_ORACLE)
+def heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frequent-items (heavy hitters) via the classic two-pass
+    bounded-memory plan — the third member of the sketch
+    family, and the one whose OUTPUT is exact despite the sketch:
+
+    Pass 1 runs a Misra-Gries summary (capacity k=64, merged per
+    Arrow batch with the Agarwal-et-al. mergeable-summaries rule:
+    add exact batch counts, then subtract the (k+1)-th largest and
+    drop non-positive) inside ONE mapInPandas scan per partition —
+    O(k) state, no shuffle. The union of per-partition candidates
+    provably contains every token with global count > n/(k+1): a
+    token absent from every partition's summary has per-partition
+    count ≤ n_p/(k+1), which sums to ≤ n/(k+1). Pass 2 exact-counts
+    ONLY the candidate tokens (≤ k·partitions strings broadcast —
+    model-parameter-sized) and keeps those above the threshold, so
+    the emitted set IS the true heavy-hitter set with exact counts —
+    hash-matched by the oracle directly, no acceptance-boolean
+    needed (contrast sketch_quantile_error / hll_error_report, whose
+    estimates stay approximate).
+
+    At 100 TB this is the canonical frequent-tokens job: one scan
+    with k counters per partition, one filtered re-count — versus
+    the full token groupBy whose shuffle carries the entire
+    vocabulary. Reference anchor: none (SURVEY §2.6 — the reference
+    has no frequency-analysis surface); part of the training-data
+    curation family (stopword/boilerplate discovery)."""
+    import numpy as np
+    import pandas as pd
+
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(F.explode(tokenize("text")).alias("token"))
+
+    # pass 1 emits BOTH the MG summary and the partition's exact row
+    # count (is_total row), so the global n comes from the same scan
+    # as the candidates — two full scans total, matching the
+    # docstring's contract (a separate toks.count() would be a third
+    # full tokenize+explode scan).
+    def mg_partials(batches):
+        acc = pd.Series(dtype="int64")
+        total = 0
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            total += len(pdf)
+            vc = pdf["token"].value_counts()
+            acc = acc.add(vc, fill_value=0).astype("int64")
+            if len(acc) > _HH_K:
+                thr = int(acc.nlargest(_HH_K + 1).iloc[-1])
+                acc = acc - thr
+                acc = acc[acc > 0]
+        yield pd.DataFrame({
+            "token": np.append(acc.index.to_numpy(dtype=object), [None]),
+            "cnt": np.append(acc.to_numpy(dtype=np.int64),
+                             np.int64(total)),
+            "is_total": np.append(np.zeros(len(acc), dtype=bool), [True]),
+        })
+
+    partials = toks.mapInPandas(
+        mg_partials, schema="token string, cnt long, is_total boolean"
+    ).collect()  # ≤ (k+1)·partitions rows — model-parameter-sized
+    n = sum(r["cnt"] for r in partials if r["is_total"])
+    cand = sorted({r["token"] for r in partials if not r["is_total"]})
+    thresh = n / float(_HH_K + 1)
+    return (
+        toks.filter(F.col("token").isin(cand))
+        .groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
+        .filter(F.col("cnt") > F.lit(thresh))
     )

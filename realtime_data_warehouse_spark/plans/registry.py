@@ -43,15 +43,15 @@ ORACLE_SQL: dict[str, str] = {}
 #:             evidence — two paths, one oracle) but a sweep that
 #:             needs to bound wall time can skip them without losing
 #:             capability coverage: scripts/parity_sweep.py --tier
-#:             core. NOTHING is removed and the registration ORDER
-#:             is untouched — the driver gate's natural-order prefix
-#:             is exactly what it was.
+#:             core. Tier never moves an entry in ORDER.
 TIERS: dict[str, str] = {}
 
 
 def register(name: str, oracle: str | None = None,
              tier: str = "core"):
     def deco(fn: SparkQuery) -> SparkQuery:
+        if name in QUERIES:
+            raise ValueError(f"registry entry {name!r} registered twice")
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE_SQL[name] = oracle
@@ -185,30 +185,256 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Pipeline modules register themselves on import (they import
-# `register` from here, so this must stay at the bottom). The registry
-# keeps natural definition order — whatever subset of it the grading
-# driver verifies is the driver's choice, not ours.
-from . import curation  # noqa: E402,F401
-from . import datapipe  # noqa: E402,F401
-from . import dim  # noqa: E402,F401
-from . import dwd  # noqa: E402,F401
-from . import dws  # noqa: E402,F401
-from . import extras  # noqa: E402,F401
-from . import sql_apps  # noqa: E402,F401
-from . import streaming_queries  # noqa: E402,F401
-from . import analytics  # noqa: E402,F401  (round 4 — appended last so earlier rounds' gate order is untouched)
-from . import governance  # noqa: E402,F401  (round 5 — same append-only discipline)
-from . import quantstats  # noqa: E402,F401  (round 5 batch 2)
-from . import classics  # noqa: E402,F401  (round 5 batch 3)
-from . import decision_support  # noqa: E402,F401  (round 5 batch 4)
-from . import rollups  # noqa: E402,F401  (round 5 batch 4)
-from . import composites  # noqa: E402,F401  (round 5 batch 5)
+# Domain modules register themselves on import (they import `register`
+# from here, so this must stay at the bottom); import order is free.
+from . import (  # noqa: E402,F401
+    analytics,
+    asof,
+    classics,
+    composites,
+    curation,
+    datapipe,
+    decision_support,
+    dim,
+    dwd,
+    dws,
+    extras,
+    governance,
+    quantstats,
+    rollups,
+    sql_apps,
+    streaming_queries,
+)
 
-from . import round6  # noqa: E402,F401  (round 6 — append-only: imported after composites)
-from . import round6b  # noqa: E402,F401  (round 6 batch 2 — append-only: imported after round6)
-from . import round7  # noqa: E402,F401  (round 7 — append-only: imported after round6b)
-from . import round8  # noqa: E402,F401  (round 8 — append-only: imported after round7)
-from . import round9  # noqa: E402,F401  (round 9 — append-only: imported after round8)
-from . import round10  # noqa: E402,F401  (round 10 — append-only: imported after round9)
-from . import round11  # noqa: E402,F401  (round 11 — append-only: imported after round10)
+#: The registry's order — the order `QUERIES`, `ORACLE_SQL` and `TIERS`
+#: iterate in, and the one the driver gate reads its prefix from. It is
+#: pinned here, not left to import and definition order: a new entry
+#: appends its name at the END, and no existing name moves.
+ORDER: tuple[str, ...] = (
+    # 0-49: the driver gate's prefix
+    "dws_traffic_page_view_window",
+    "dws_keyword_count",
+    "pricing_summary",
+    "text_stats",
+    "text_quality_filter",
+    "text_langid",
+    "doc_fingerprint",
+    "pii_redaction",
+    "tfidf_top_terms",
+    "dedup_exact_stats",
+    "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "dedup_embedding_cosine",
+    "ann_brute_topk",
+    "ann_ivf_topk",
+    "multimodal_metadata",
+    "multimodal_frame_sample",
+    "multimodal_features",
+    "ann_lsh_topk",
+    "multimodal_resize",
+    "embedding_normalize",
+    "ann_ivf_trained_topk",
+    "ann_ivf_pq_topk",
+    "train_val_test_split",
+    "doc_chunking",
+    "curation_pipeline",
+    "crosssource_neardup_matrix",
+    "bigram_lm_score",
+    "decontaminate_train",
+    "decontaminate_mask_spans",
+    "gram_novelty",
+    "quality_repetition",
+    "domain_quota_cap",
+    "stratified_sample_langs",
+    "pack_sequences_by_lang",
+    "corpus_mixture_weights",
+    "dedup_keep_first",
+    "dedup_clusters",
+    "semdedup_keep_first",
+    "label_centroids",
+    "dedup_clusters_converged",
+    "dim_config_routing",
+    "dim_sku_final_state",
+    "stream_dim_sku_final_state",
+    "dwd_trade_cart_add",
+    "dwd_trade_order_detail",
+    "dwd_trade_order_cancel",
+    "dwd_trade_pay_suc_interval",
+    "dwd_comment_dic_lookup",
+    # 50 onward
+    "dwd_log_split",
+    "dwd_base_db_routing",
+    "dws_sku_order_window",
+    "dws_province_order_window",
+    "dws_home_detail_uv_window",
+    "dws_user_login_window",
+    "dws_user_register_window",
+    "dws_trade_order_window",
+    "a6_latest_per_key_sum",
+    "a8_is_new_repair",
+    "dws_cart_add_uu_window",
+    "dws_payment_suc_window",
+    "dws_traffic_vc_ch_ar_is_new_window",
+    "topk_parts_per_brand",
+    "top100_orders",
+    "set_ops_users",
+    "f_scalar_kitchen_sink",
+    "asof_last_error",
+    "semi_anti_customers",
+    "rollup_revenue",
+    "local_supplier_volume",
+    "sessionize_user_events",
+    "range_join_promo_windows",
+    "time_bucket_rollup_events",
+    "percentile_revenue",
+    "sketch_quantiles_distinct",
+    "running_revenue_by_customer",
+    "pivot_status_by_year",
+    "top_unshipped_orders",
+    "profile_orders",
+    "incremental_agg_refresh",
+    "mv_rollup_rewrite",
+    "sliding_traffic_window",
+    "cube_revenue",
+    "moving_avg_daily_revenue",
+    "json_props_extract",
+    "hll_rollup_daily_uv",
+    "gapfill_hourly_values",
+    "gapfill_hourly_interp",
+    "late_dim_audit",
+    "dedup_simhash_fast",
+    "sql_trade_order_detail",
+    "sql_keyword_window",
+    "sql_correlated_subquery",
+    "stream_traffic_page_view_window",
+    "stream_sku_order_window",
+    "stream_a6_delta_sum",
+    "stream_interval_join_pay_detail",
+    "stream_sessionize_user_events",
+    "stream_daily_uv_window",
+    "stream_log_split",
+    "stream_dedup_exact_keep_first",
+    "stream_quality_filter",
+    "stream_pack_sequences",
+    "stream_incremental_agg_refresh",
+    "stream_left_interval_join",
+    "stream_gapfill_hourly",
+    "stream_scd2_dim_history",
+    "stream_funnel_conversion",
+    "stream_anomaly_zscore",
+    "stream_ohlc_daily_bars",
+    "stream_retention_cohorts",
+    "stream_dq_violations_daily",
+    "stream_dedup_within_watermark",
+    "stream_touch_attribution",
+    "funnel_conversion",
+    "retention_cohorts",
+    "anomaly_zscore_hourly",
+    "scd2_dim_history",
+    "passage_dedup_stats",
+    "time_weighted_avg",
+    "ohlc_daily_bars",
+    "corr_qty_price",
+    "revenue_histogram",
+    "scd2_point_in_time_join",
+    "fuzzy_join_parts",
+    "embedding_int8_quantize",
+    "k_anonymity_audit",
+    "pagerank_bipartite_3iter",
+    "touch_attribution",
+    "snapshot_diff_cdc",
+    "gdpr_forget_users",
+    "audience_overlap",
+    "quality_percentile_by_lang",
+    "importance_weighted_sample",
+    "decontaminate_neardup",
+    "stream_audience_overlap",
+    "dq_orders_expectations",
+    "weighted_median_price",
+    "seasonal_dow_index",
+    "embedding_dim_stats",
+    "containment_pairs",
+    "dedup_incremental",
+    "ann_recall_report",
+    "stream_dedup_incremental",
+    "customer_order_distribution",
+    "promo_revenue_share",
+    "mixture_temperature_weights",
+    "multimodal_dedup",
+    "event_path_trigrams",
+    "fulfillment_latency",
+    "stream_fulfillment_latency",
+    "token_rarity_score",
+    "vocab_coverage_report",
+    "exact_median_price_two_pass",
+    "min_cost_regional_supplier",
+    "small_qty_order_revenue",
+    "large_volume_customers",
+    "disjunctive_predicate_revenue",
+    "waiting_orders_by_supplier",
+    "dormant_customers_audit",
+    "top_supplier_quarter",
+    "stream_large_volume_customers",
+    "returned_items_report",
+    "late_shipment_priority_counts",
+    "nation_pair_trade_volume",
+    "market_share_by_year",
+    "product_profit_by_nation_year",
+    "copurchase_part_pairs",
+    "trend_fit_daily_revenue",
+    "stream_market_share_by_year",
+    "stream_trend_fit_daily_revenue",
+    "forecast_revenue_change",
+    "grouping_sets_revenue",
+    "unpivot_nation_metrics",
+    "rolling_7d_distinct_users",
+    "sample_k_per_lang",
+    "weighted_sample_per_source",
+    "stream_rolling_7d_distinct_users",
+    "cohort_ltv_curve",
+    "heavy_hitter_users",
+    "user_activity_streaks",
+    "ann_rrf_fusion",
+    "dedup_keep_best_quality",
+    "winsorized_price_stats",
+    "label_noise_candidates",
+    "ann_lsh_recall",
+    "stream_order_wide_join",
+    "stream_neardup_gate",
+    "stream_ann_route",
+    "sketch_quantile_error",
+    "hll_error_report",
+    "heavy_hitters_exact",
+    "simhash_fast_recall_gate",
+    "stream_heavy_hitters",
+    "stream_asof_enrich",
+    "stream_asof_disordered",
+    "stream_asof_late",
+    "multimodal_real_decode",
+    "multimodal_wav_decode",
+    "scd2_changes_since",
+    "multiwriter_additive_sum",
+)
+
+
+def pin_order(order, queries: dict, *keyed: dict) -> None:
+    """Re-key `queries` and every dict in `keyed` (in place, so every
+    importer's reference stays valid) into `order`. Raises if a
+    registered name is missing from `order`, or a name in `order` is
+    not registered."""
+    listed = set(order)
+    unlisted = [n for n in queries if n not in listed]
+    unregistered = [n for n in order if n not in queries]
+    if unlisted or unregistered or len(listed) != len(order):
+        raise RuntimeError(
+            f"registry ORDER out of sync: registered but not in ORDER "
+            f"{unlisted}, in ORDER but not registered {unregistered}, "
+            f"{len(order) - len(listed)} duplicate name(s)")
+    for d in (queries, *keyed):
+        items = [(n, d[n]) for n in order if n in d]
+        d.clear()
+        d.update(items)
+
+
+pin_order(ORDER, QUERIES, ORACLE_SQL, TIERS)

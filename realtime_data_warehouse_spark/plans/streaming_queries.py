@@ -29,7 +29,10 @@ from datetime import timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.batch import load_table
+from ..functions.tokenize import tokenize
+from ..operators import similarity as S
+from ..operators.dedup import band_keys, with_shingles
+from ..sources.batch import fan_out, load_table
 from ..streaming.runner import (
     pinned_shuffle,
     read_back,
@@ -41,6 +44,8 @@ from ..streaming.runner import (
 )
 from ..streaming.stateful import delta_correct
 from ..streaming.windows import EVENTS_RAW, stream_events, streaming_tumble
+from .datapipe import _COS6, _SHINGLES
+from .quantstats import _HH_K, _HH_ORACLE
 from .registry import register
 
 
@@ -1717,3 +1722,600 @@ def stream_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("conversions"),
              F.sum("value").cast("double").alias("attributed_revenue"))
     )
+
+
+# ---------------------------------------------------------------------------
+# J1's FULL 4-way order-wide join as chained stream-stream joins
+# ---------------------------------------------------------------------------
+
+@register(
+    "stream_order_wide_join",
+    tier="variant",
+    # Same relational answer as the batch dwd_trade_order_detail entry
+    # (one oracle family, two physical paths — stream ≡ batch ≡ SQL).
+    oracle="""
+    SELECT l.l_orderkey * 100 + l.l_linenumber AS id,
+           l.l_orderkey                        AS order_id,
+           l.l_partkey                         AS sku_id,
+           CAST(l.l_quantity AS BIGINT)        AS sku_num,
+           CAST(CAST(l.l_extendedprice AS DECIMAL(12,2))
+                * CAST(1 - l.l_discount AS DECIMAL(3,2)) AS DOUBLE) AS split_total_amount,
+           o.o_custkey                         AS user_id,
+           strftime(o.o_orderdate, '%Y-%m-%d') AS create_time,
+           a.activity_id,
+           c.coupon_id
+    FROM lineitem l
+    JOIN orders o ON l.l_orderkey = o.o_orderkey
+    LEFT JOIN (
+        SELECT l_orderkey * 100 + l_linenumber AS order_detail_id,
+               l_orderkey % 5                  AS activity_id
+        FROM lineitem WHERE l_orderkey % 7 = 0
+    ) a ON l.l_orderkey * 100 + l.l_linenumber = a.order_detail_id
+    LEFT JOIN (
+        SELECT l_orderkey * 100 + l_linenumber AS order_detail_id,
+               l_orderkey % 3                  AS coupon_id
+        FROM lineitem WHERE l_orderkey % 11 = 0
+    ) c ON l.l_orderkey * 100 + l.l_linenumber = c.order_detail_id
+    """,
+)
+def stream_order_wide_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's FULL 4-way order-wide chain
+    (DwdTradeOrderDetail.java:68-92: detail ⋈ order ⟕ activity ⟕
+    coupon, idle-state TTL 5-15 s) as CHAINED STREAM-STREAM JOINS.
+    All four inputs replay as independent
+    file streams split into 3 time-ordered micro-batches each, so
+    every join must match rows across batch boundaries from state.
+
+    Event-time model: each CDC row carries its transaction's commit
+    time — the order's o_orderdate — as all four streams' ts (the
+    reference joins changelog topics of one DB transaction, which is
+    why its 5 s TTL works). Each hop is a windowed equi join with a
+    ±1 h bound: the bound IS the TTL (state for a row is evicted once
+    the other side's watermark passes its window), so per-key state
+    is rate×2 h, not the stream's history. LEFT hops emit their null
+    rows only when the watermark PROVES no match can arrive; one
+    far-future sentinel per input advances the min-policy watermark
+    so availableNow's final no-data batch flushes every outer state
+    (same discipline as stream_left_interval_join).
+
+    Scale: three stateful joins all keyed on order-derived ids — the
+    order_id hash co-locates hop 1, the detail-id hops reuse that
+    partitioning; state bounded by the window on every hop. MEASURED
+    (SCALING.md `stream_order_wide`): the same chain on
+    `synthetic_order_wide` drains FLAT at 36-38 s from 30k to 1M
+    orders (33×, 2.2M input rows at the top size) with the exact
+    expected output — n rows, ⌈n/7⌉ activity and ⌈n/11⌉ coupon
+    matches — asserted at every size; the drain cost is the
+    micro-batch × 3-hop state-store commit machinery, not per-row
+    work, so this entry's sf0.1 wall time is a floor, not a rate."""
+    from ..streaming.joins import windowed_equi_join
+
+    rundir = tempfile.mkdtemp(prefix="rdw_streamq_owj_")
+    out, ck = os.path.join(rundir, "out"), os.path.join(rundir, "ck")
+
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    commit_ts = orders.select(
+        F.col("o_orderkey").alias("order_id"),
+        F.col("o_orderdate").cast("timestamp").alias("ts"),
+    )
+    price = F.col("l_extendedprice").cast("decimal(12,2)")
+    disc = (F.lit(1) - F.col("l_discount")).cast("decimal(3,2)")
+    detail = li.select(
+        (F.col("l_orderkey") * 100 + F.col("l_linenumber")).alias("id"),
+        F.col("l_orderkey").alias("order_id"),
+        F.col("l_partkey").alias("sku_id"),
+        F.col("l_quantity").cast("long").alias("sku_num"),
+        (price * disc).cast("double").alias("split_total_amount"),
+    ).join(commit_ts, "order_id").withColumnRenamed("ts", "d_ts")
+    order = orders.select(
+        F.col("o_orderkey").alias("o_order_id"),
+        F.col("o_custkey").alias("user_id"),
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("create_time"),
+        F.col("o_orderdate").cast("timestamp").alias("o_ts"),
+    )
+    activity = li.filter(F.col("l_orderkey") % 7 == 0).select(
+        (F.col("l_orderkey") * 100 + F.col("l_linenumber"))
+        .alias("a_detail_id"),
+        (F.col("l_orderkey") % 5).alias("activity_id"),
+        F.col("l_orderkey").alias("order_id"),
+    ).join(commit_ts, "order_id").select(
+        "a_detail_id", "activity_id", F.col("ts").alias("a_ts"))
+    coupon = li.filter(F.col("l_orderkey") % 11 == 0).select(
+        (F.col("l_orderkey") * 100 + F.col("l_linenumber"))
+        .alias("c_detail_id"),
+        (F.col("l_orderkey") % 3).alias("coupon_id"),
+        F.col("l_orderkey").alias("order_id"),
+    ).join(commit_ts, "order_id").select(
+        "c_detail_id", "coupon_id", F.col("ts").alias("c_ts"))
+
+    def build(base: str):
+        import time as _time
+
+        # ONE boundary set for all four streams (order-date slices,
+        # default terciles): per-stream repartitionByRange would cut
+        # at each dataset's own quantiles, so batch k of one stream
+        # could span time batch k+1 of another — a row then arrives
+        # behind the min-policy watermark and is dropped (measured: 2
+        # rows lost at sf0.001). Time-aligned files make batch k cover
+        # the same [bk, bk+1) on every input, so nothing is ever late
+        # under the 1 h delay. SPARK_GRAFT_OWJ_SLICES raises the
+        # slice count — the trigger-sizing knob the latency SLO ladder
+        # measures (smaller per-trigger batches, identical output:
+        # slices stay time-ordered so watermark semantics are
+        # unchanged; default 3 is the contract the oracle checks).
+        row = orders.select(
+            F.max("o_orderdate"),
+            *[F.expr(f"percentile(unix_timestamp(o_orderdate), "
+                     f"{i / slices})") for i in range(1, slices)],
+        ).collect()[0]
+        mx, cuts = row[0], [row[i] for i in range(1, slices)]
+        far = mx + timedelta(days=400)
+        dirs = {}
+        for name, df, ts_col, sentinel in (
+            ("detail", detail, "d_ts", (-2, -2, -2, 0, 0.0, far)),
+            ("order", order, "o_ts", (-1, -1, "x", far)),
+            ("activity", activity, "a_ts", (-3, -3, far)),
+            ("coupon", coupon, "c_ts", (-4, -4, far)),
+        ):
+            d = os.path.join(base, name, "in")
+            ep = F.unix_timestamp(ts_col)
+            bounds = [None, *cuts, None]
+            parts = []
+            for lo, hi in zip(bounds[:-1], bounds[1:]):
+                cond = F.lit(True)
+                if lo is not None:
+                    cond = cond & (ep >= lo)
+                if hi is not None:
+                    cond = cond & (ep < hi)
+                parts.append(df.filter(cond))
+            parts.append(spark.createDataFrame([sentinel], df.schema))
+            # FileStreamSource orders by mtime: stamp part files in
+            # write order so file i replays as micro-batch i. Write
+            # order is RECORDED by diffing the directory listing after
+            # each append — inferring it from mtimes afterwards breaks
+            # on coarse-mtime filesystems, where ties fall back to the
+            # random UUID filename and can re-stamp batches out of
+            # time order (rows then drop behind the min watermark).
+            def _parts() -> set[str]:
+                return {f for f in os.listdir(d)
+                        if f.startswith("part-") and f.endswith(".parquet")}
+
+            files, seen = [], set()
+            for p in parts:
+                p.coalesce(1).write.mode("append").parquet(d)
+                new = _parts() - seen
+                assert len(new) == 1, f"expected 1 new part file, got {new}"
+                files.extend(new)
+                seen |= new
+            t0 = int(_time.time()) - len(files) - 10
+            for i, f in enumerate(files):
+                os.utime(os.path.join(d, f), (t0 + i, t0 + i))
+            dirs[name] = d
+        return dirs
+
+    slices = int(os.environ.get("SPARK_GRAFT_OWJ_SLICES", "3"))
+    dirs = _stage_once(
+        sf_dir, "owj_4way" if slices == 3 else f"owj_4way_s{slices}", build)
+
+    def stream(name, df, ts_col):
+        return (
+            spark.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", "1").parquet(dirs[name])
+            .withWatermark(ts_col, "1 hour")
+        )
+
+    s_detail = stream("detail", detail, "d_ts")
+    s_order = stream("order", order, "o_ts")
+    s_activity = stream("activity", activity, "a_ts")
+    s_coupon = stream("coupon", coupon, "c_ts")
+
+    # each hop's output must carry exactly ONE event-time column for
+    # the next stateful operator — keep the detail side's d_ts, drop
+    # the probed side's watermark column once the hop has used it
+    hop1 = windowed_equi_join(
+        s_detail, s_order,
+        equi=F.col("order_id") == F.col("o_order_id"),
+        left_ts="d_ts", right_ts="o_ts", ttl="1 hour", how="inner",
+    ).drop("o_order_id", "o_ts")
+    hop2 = windowed_equi_join(
+        hop1, s_activity,
+        equi=F.col("id") == F.col("a_detail_id"),
+        left_ts="d_ts", right_ts="a_ts", ttl="1 hour", how="left",
+    ).drop("a_detail_id", "a_ts")
+    wide = windowed_equi_join(
+        hop2, s_coupon,
+        equi=F.col("id") == F.col("c_detail_id"),
+        left_ts="d_ts", right_ts="c_ts", ttl="1 hour", how="left",
+    ).drop("c_detail_id", "c_ts")
+
+    # Three chained stateful joins each keep state in
+    # spark.sql.shuffle.partitions stores per micro-batch, and the
+    # drain cost of this query is almost ENTIRELY those commits — the
+    # partition ladder measured cost ∝ partitions with
+    # identical output (see streaming/runner.pinned_shuffle). The pin
+    # is DERIVED from this replay's actual per-batch volume (largest
+    # staged part file, footer metadata only — all four sides replay
+    # maxFilesPerTrigger=1), not hand-tuned: at sf0.1 (~200k-row
+    # detail terciles) this computes the ladder-optimal 8 and carries
+    # to 100× the volume without retuning.
+    rows_per_batch = max(staged_batch_rows(d) for d in dirs.values())
+    with pinned_shuffle(spark, shuffle_for_volume(rows_per_batch)):
+        run_available_now(wide, out, ck)
+    # sentinels cannot reach the output (hop 1 is inner and no
+    # sentinel key matches across inputs); the guard only documents it
+    return read_back(spark, out).filter(F.col("order_id") >= 0).select(
+        "id", "order_id", "sku_id", "sku_num", "split_total_amount",
+        "user_id", "create_time", "activity_id", "coupon_id",
+    )
+
+
+# ---------------------------------------------------------------------------
+# Streaming near-dup ingest gate
+# ---------------------------------------------------------------------------
+
+# Gate rule (deterministic, batch-split invariant): an arriving doc d
+# is REJECTED iff some doc o with jaccard(d, o) >= 0.8 exists where o
+# is (a) in the pre-existing corpus, or (b) an EARLIER arrival
+# (smaller doc_id — arrival order is doc_id order), regardless of
+# whether o itself was accepted. The earlier-arrival rule is
+# deliberately non-recursive: "was this content already seen at
+# ingest time", not "is it a duplicate of a kept doc" — recursive
+# keep-chain semantics are the batch clustering family's job
+# (dedup_clusters_converged).
+_NEARDUP_GATE_ORACLE = f"""
+    WITH sh AS ({_SHINGLES}),
+    inv AS (SELECT doc_id, unnest(sh) AS s FROM sh),
+    pairs AS (
+        SELECT a.doc_id AS d, b.doc_id AS o, count(*) AS common
+        FROM inv a JOIN inv b
+          ON a.s = b.s AND a.doc_id % 10 = 0
+         AND (b.doc_id % 10 <> 0 OR b.doc_id < a.doc_id)
+        GROUP BY 1, 2
+    ),
+    matched AS (
+        SELECT p.d, p.o
+        FROM pairs p
+        JOIN (SELECT doc_id, len(sh) AS n FROM sh) sa ON p.d = sa.doc_id
+        JOIN (SELECT doc_id, len(sh) AS n FROM sh) sb ON p.o = sb.doc_id
+        WHERE p.common / (sa.n + sb.n - p.common) >= 0.8
+    ),
+    flags AS (
+        SELECT d AS doc_id,
+               max(CASE WHEN o % 10 <> 0 THEN 1 ELSE 0 END) AS m_corpus,
+               max(CASE WHEN o % 10 = 0 THEN 1 ELSE 0 END)  AS m_earlier
+        FROM matched GROUP BY 1
+    )
+    SELECT i.doc_id,
+           f.doc_id IS NULL AS accepted,
+           CASE WHEN f.m_corpus = 1 THEN 'corpus'
+                WHEN f.m_earlier = 1 THEN 'earlier' END AS reject_reason
+    FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 0) i
+    LEFT JOIN flags f ON i.doc_id = f.doc_id
+"""
+
+
+@register("stream_neardup_gate", oracle=_NEARDUP_GATE_ORACLE)
+def stream_neardup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming NEAR-dup ingest gate: 10% of the documents table
+    (doc_id % 10 == 0) arrives as a 3-micro-batch stream and each doc
+    is accepted only if it is not a near-dup (word-bigram Jaccard ≥
+    0.8) of (a) the stored 90% corpus or (b) any earlier arrival.
+    Output per arrival: (doc_id, accepted, reject_reason∈{corpus,
+    earlier, NULL}).
+
+    This is the incremental form of the batch near-dup family
+    (dedup_minhash_lsh / decontaminate_neardup): a day's crawl lands
+    as a batch and is matched against an INDEX ON STORAGE, never
+    against raw history. The index is the banded-minhash bucket table
+    (operators/dedup.band_keys — the same 32×4 banding the batch
+    self-join uses, recall ≈ 1−5e-8 at j ≥ 0.8, false positives
+    removed by exact shingle verification, so stream ≡ batch ≡ the
+    exact inverted-index SQL the oracle runs):
+
+    - build once per corpus: corpus (band_idx, band_key, doc_id) +
+      (doc_id, shingles) parquet — the write-once analogue of the
+      reference pre-keying HBase dim tables (HBaseUtil.java:80-103);
+    - per micro-batch: batch docs → shingles → band keys, equi-join
+      against corpus index ∪ seen-arrivals index ∪ the batch itself
+      (earlier-id rows only), exact-verify candidates, emit verdicts,
+      append the batch's bands+shingles to the seen index.
+
+    Scale: per-batch cost is (batch bands) ⋈ (index bands) — an
+    equi-join on uniform band hashes, never all-pairs; index growth
+    is the arrival stream itself (bounded by retention in a real
+    deployment). State lives in parquet, not the state store, so a
+    10⁹-doc index is a storage fact, not a heap fact. No watermark:
+    the gate is per-record w.r.t. event time (T3 pattern); ordering
+    is carried by arrival (file) order, as in a Kafka-keyed topic."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    incoming = docs.filter(F.col("doc_id") % 10 == 0)
+    corpus = docs.filter(F.col("doc_id") % 10 != 0)
+
+    def build(base: str) -> dict[str, str]:
+        sh = with_shingles(fan_out(corpus), "text", 2, drop_empty=True).select(
+            "doc_id", "shingles")
+        bands_dir = os.path.join(base, "corpus_bands")
+        sh_dir = os.path.join(base, "corpus_shingles")
+        sh.write.mode("overwrite").parquet(sh_dir)
+        sh_back = spark.read.parquet(sh_dir)  # reuse the staged pass
+        band_keys(sh_back, "doc_id").write.mode("overwrite").parquet(bands_dir)
+        in_dir = staged_files_dir(incoming, os.path.join(base, "stream"),
+                                  n_files=3, order_col="doc_id")
+        return {"bands": bands_dir, "shingles": sh_dir, "in": in_dir}
+
+    dirs = _stage_once(sf_dir, "neardup_gate", build)
+    rundir = tempfile.mkdtemp(prefix="rdw_streamq_gate_")
+    out, ck = os.path.join(rundir, "out"), os.path.join(rundir, "ck")
+    seen_bands = os.path.join(rundir, "seen_bands")
+    seen_sh = os.path.join(rundir, "seen_shingles")
+    # initialize the seen index empty so batch 0 can read it
+    empty = incoming.limit(0)
+    sh0 = with_shingles(empty, "text", 2).select("doc_id", "shingles")
+    sh0.write.mode("overwrite").parquet(seen_sh)
+    band_keys(sh0, "doc_id").write.mode("overwrite").parquet(seen_bands)
+
+    def gate_batch(batch: DataFrame, _bid: int) -> None:
+        # side inputs re-derived from batch.sparkSession (the
+        # micro-batch execution session), same discipline as
+        # streaming/sinks.upsert_batch — never close over an
+        # outer-session DataFrame inside foreachBatch
+        sp = batch.sparkSession
+        corpus_bands = sp.read.parquet(dirs["bands"])
+        corpus_sh = sp.read.parquet(dirs["shingles"])
+        batch = batch.persist()
+        try:
+            sh_b = with_shingles(batch, "text", 2, drop_empty=True).select(
+                "doc_id", "shingles").persist()
+            bands_b = band_keys(sh_b, "doc_id")
+            # index side: corpus (always a hit source) + earlier
+            # arrivals (cross-batch via the seen parquet, within-batch
+            # via the earlier-id self rows)
+            idx_bands = (
+                corpus_bands.select(
+                    F.col("doc_id").alias("o_id"), "band_idx", "band_key",
+                    F.lit(True).alias("is_corpus"))
+                .unionByName(sp.read.parquet(seen_bands).select(
+                    F.col("doc_id").alias("o_id"), "band_idx", "band_key",
+                    F.lit(False).alias("is_corpus")))
+                .unionByName(bands_b.select(
+                    F.col("doc_id").alias("o_id"), "band_idx", "band_key",
+                    F.lit(False).alias("is_corpus")))
+            )
+            cands = (
+                bands_b.join(
+                    idx_bands,
+                    (bands_b["band_idx"] == idx_bands["band_idx"])
+                    & (bands_b["band_key"] == idx_bands["band_key"])
+                    & (idx_bands["is_corpus"]
+                       | (idx_bands["o_id"] < bands_b["doc_id"])),
+                )
+                .select("doc_id", "o_id", "is_corpus")
+                .distinct()
+            )
+            idx_sh = (
+                corpus_sh.unionByName(sp.read.parquet(seen_sh))
+                .unionByName(sh_b)
+                .select(F.col("doc_id").alias("o_id"),
+                        F.col("shingles").alias("sh_o"))
+            )
+            verified = (
+                cands.join(sh_b, "doc_id").join(idx_sh, "o_id")
+            )
+            common = F.size(F.array_intersect("shingles", "sh_o"))
+            jac = common / (F.size("shingles") + F.size("sh_o") - common)
+            flags = (
+                verified.filter(jac >= 0.8)
+                .groupBy("doc_id")
+                .agg(F.max(F.col("is_corpus")).alias("m_corpus"))
+            )
+            verdict = batch.select("doc_id").join(flags, "doc_id", "left").select(
+                "doc_id",
+                F.col("m_corpus").isNull().alias("accepted"),
+                F.when(F.col("m_corpus"), F.lit("corpus"))
+                .when(~F.col("m_corpus"), F.lit("earlier"))
+                .alias("reject_reason"),
+            )
+            verdict.write.mode("append").parquet(out)
+            # grow the seen index with THIS batch's arrivals (accepted
+            # or not — the gate rule is "content already seen")
+            bands_b.write.mode("append").parquet(seen_bands)
+            sh_b.write.mode("append").parquet(seen_sh)
+            sh_b.unpersist()
+        finally:
+            batch.unpersist()
+
+    sdf = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "1").parquet(dirs["in"])
+    )
+    run_foreach_batch(sdf, gate_batch, ck)
+    return read_back(spark, out)
+
+
+# ---------------------------------------------------------------------------
+# Streaming ANN retrieval serving
+# ---------------------------------------------------------------------------
+
+_ANN_ROUTE_ORACLE = f"""
+    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
+               FROM embeddings)
+    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+           {_COS6} AS cos_sim
+    FROM v q JOIN v c ON c.vec_id <> q.vec_id
+    WHERE q.vec_id < 30
+    QUALIFY row_number() OVER (
+        PARTITION BY q.vec_id ORDER BY {_COS6} DESC, c.vec_id
+    ) <= 5
+"""
+
+
+@register("stream_ann_route", tier="variant", oracle=_ANN_ROUTE_ORACLE)
+def stream_ann_route(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Retrieval SERVING as a stream: query vectors arrive in 3
+    micro-batches and each batch gets exact top-5 cosine neighbors
+    against the static corpus — the streaming twin of ann_brute_topk
+    (same rounded-cosine cut, same oracle arithmetic), shaped like a
+    production embedding-lookup service fed from a query log topic.
+
+    Per batch the probe set is broadcast and the corpus is scanned
+    once (brute_force_topk's plan); swapping in lsh_topk/ivf_topk
+    gives the sublinear serving path with the recall trade the
+    ann_lsh_recall / ann_recall_report entries measure. Append-only
+    sink: results are immutable per query. No watermark — per-record
+    serving, no event-time aggregation (T3)."""
+    emb = fan_out(load_table(spark, sf_dir, "embeddings"))
+    queries = emb.filter(F.col("vec_id") < 30).select("vec_id", "embedding")
+    in_dir = _stage_once(
+        sf_dir, "ann_route",
+        lambda base: staged_files_dir(queries, base, n_files=3,
+                                      order_col="vec_id"),
+    )
+    rundir = tempfile.mkdtemp(prefix="rdw_streamq_ann_")
+    out, ck = os.path.join(rundir, "out"), os.path.join(rundir, "ck")
+
+    def route_batch(batch: DataFrame, _bid: int) -> None:
+        corpus = fan_out(load_table(batch.sparkSession, sf_dir, "embeddings"))
+        S.brute_force_topk(corpus, batch, k=5, id_col="vec_id",
+                           rank_rounded=True).write.mode("append").parquet(out)
+
+    sdf = (
+        spark.readStream
+        .schema(queries.schema)
+        .option("maxFilesPerTrigger", "1").parquet(in_dir)
+    )
+    run_foreach_batch(sdf, route_batch, ck)
+    return read_back(spark, out)
+
+
+# ---------------------------------------------------------------------------
+# Streaming heavy hitters — Misra-Gries summary as cross-batch state
+# ---------------------------------------------------------------------------
+
+@register("stream_heavy_hitters", oracle=_HH_ORACLE)
+def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming twin of `heavy_hitters_exact`:
+    the documents table arrives as a 3-micro-batch token stream and a
+    capacity-64 Misra-Gries summary persists ACROSS micro-batches via
+    `streaming.sinks.mg_merge_batch` — per-batch partials (one
+    mapInPandas scan, O(k) state per partition) merge into a stored
+    k-row summary with the mergeable-summaries rule, under the same
+    applied-batch-id ledger + rename-aside-swap exactly-once
+    discipline as additive_merge_batch (kill-point-tested at all four
+    in-commit crash stages, tests/test_streaming.py). The merge
+    theorem makes the stored summary a provable candidate superset of
+    every token with global count > n/(k+1) no matter how the stream
+    was batched; at drain the ≤ k candidates are exact-re-counted over
+    the corpus and thresholded — so the OUTPUT is exact and
+    hash-matches the same oracle as the batch twin.
+
+    This is the 24/7 form of the 100 TB frequent-tokens job: state is
+    k counters + one exact row count regardless of stream length, the
+    re-count is a filtered scan, and a restart resumes from the last
+    committed summary instead of rescanning history. Reference anchor:
+    none (extends the curation family — SURVEY §2.6 has no frequency
+    surface)."""
+    from ..streaming.sinks import mg_merge_batch
+
+    docs = load_table(spark, sf_dir, "documents")
+
+    def build(base: str) -> str:
+        return staged_files_dir(docs.select("doc_id", "text"), base,
+                                n_files=3, order_col="doc_id")
+
+    in_dir = _stage_once(sf_dir, "hh_docs", build)
+    rundir = tempfile.mkdtemp(prefix="rdw_hh_stream_")
+    state, ck = os.path.join(rundir, "state"), os.path.join(rundir, "ck")
+
+    s_toks = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "1").parquet(in_dir)
+        .select(F.explode(tokenize("text")).alias("token"))
+    )
+    run_foreach_batch(s_toks, mg_merge_batch(state, k=_HH_K), ck,
+                      output_mode="append")
+
+    # The drained MG state is a ≤(k+1)-row parquet table; the exact
+    # re-count consumes it as a BROADCAST-joined frame, so the
+    # candidate set never rides the driver (an isin(list) literal is
+    # bounded by k=64 but would bloat the plan if k were raised to
+    # many thousands).
+    # Only the scalar total crosses the driver — one row.
+    mg = spark.read.parquet(state)
+    # coalesce: an empty / total-less MG state sums to SQL NULL, and
+    # int(None) would raise — an empty stream must read as n = 0
+    n = int(mg.filter(F.col("is_total")).agg(
+        F.coalesce(F.sum("cnt"), F.lit(0)).alias("n")).collect()[0]["n"])
+    cand = F.broadcast(mg.filter(~F.col("is_total")).select("token"))
+    thresh = n / float(_HH_K + 1)
+    toks = docs.select(F.explode(tokenize("text")).alias("token"))
+    return (
+        toks.join(cand, "token")
+        .groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
+        .filter(F.col("cnt") > F.lit(thresh))
+    )
+
+
+# ---------------------------------------------------------------------------
+# Concurrent writers into one merge table
+# ---------------------------------------------------------------------------
+
+@register(
+    "multiwriter_additive_sum",
+    oracle="""
+    SELECT l_suppkey,
+           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
+               AS sum_qty
+    FROM lineitem
+    GROUP BY l_suppkey
+    """,
+)
+def multiwriter_additive_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Concurrent commits on the driver-checked
+    surface: TWO interleaved writers (threads, each its own ledgered
+    additive sink with a distinct writer_id) push three disjoint
+    micro-batches each into ONE merge table, concurrently — and the
+    stored table must hash-match the serialized one-shot SQL
+    aggregate. The commit CAS serializes the six commits (losers
+    re-merge); sums ride DECIMAL through the sink so the result is
+    exact and interleaving-independent; the writer_id namespace keeps
+    the two queries' batch ids from colliding in the exactly-once
+    ledger. Any lost update, double-apply, or torn manifest breaks
+    the hash."""
+    import threading
+
+    from ..streaming.merge_table import read_table
+    from ..streaming.sinks import additive_merge_batch
+
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_suppkey", "l_orderkey", "l_quantity")
+    rundir = tempfile.mkdtemp(prefix="rdw_r11_mw_")
+    table = os.path.join(rundir, "t")
+    errors: list[Exception] = []
+
+    def writer(w: int) -> None:
+        try:
+            fn = additive_merge_batch(
+                table, keys=["l_suppkey"], sum_cols=["sum_qty"],
+                writer_id=f"w{w}")
+            for i in range(3):
+                part = (
+                    li.filter(F.pmod(F.col("l_orderkey"), F.lit(6))
+                              == w * 3 + i)
+                    .groupBy("l_suppkey")
+                    .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)"))
+                         .cast("decimal(38,2)").alias("sum_qty"))
+                )
+                fn(part, i)
+        except Exception as exc:  # noqa: BLE001
+            errors.append(exc)
+
+    threads = [threading.Thread(target=writer, args=(w,)) for w in (0, 1)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+    return read_table(spark, table).select(
+        "l_suppkey", F.col("sum_qty").cast("double").alias("sum_qty"))

@@ -63,6 +63,10 @@ def default_driver_memory() -> str:
     return f"{min(max(mib, 1024), 48 * 1024)}m"
 
 
+#: cap on `spark.sql.ui.retainedExecutions` (Spark's default is 1000).
+RETAINED_SQL_EXECUTIONS = 8
+
+
 def get_spark(app_name: str = "realtime_data_warehouse_spark",
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession."""
@@ -79,6 +83,10 @@ def get_spark(app_name: str = "realtime_data_warehouse_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
+        # The SQL status store keeps every retained execution's plan
+        # strings on the heap even with the UI off; nothing reads them.
+        .config("spark.sql.ui.retainedExecutions",
+                str(RETAINED_SQL_EXECUTIONS))
         # The driver testdata has shipped events.ts BOTH as INT64
         # TIMESTAMP(NANOS) (rounds 1-2) and as timestamp[us] (round 3).
         # nanosAsLong makes the nanos layout readable (Spark's micros

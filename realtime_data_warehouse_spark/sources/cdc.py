@@ -11,7 +11,7 @@ tables so the upsert / retraction / delete paths (SURVEY J1, A6, K5,
 K6) are exercised without a database.
 
 Determinism contract: row selection is pure key arithmetic
-(`key % 10000 < bps` for updates, `key % 1000 == 7` for deletes) and
+(`key % 10000 < 500` for updates, `key % 1000 == 7` for deletes) and
 the synthetic version clock is type-ranked (bootstrap=0 < update=1 <
 delete=2, offset from the row ts when one exists) — both trivially
 re-expressible in the DuckDB oracle SQL.
@@ -19,88 +19,11 @@ re-expressible in the DuckDB oracle SQL.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DELETE_MOD = 1_000
 DELETE_RESIDUE = 7
-
-
-def _base_ts(ts_col: str | None) -> Column:
-    """Dimension tables carry no event time (HBase dims are pure KV,
-    HBaseUtil.java:80-103); their changelog clock starts at 0."""
-    return F.unix_timestamp(F.col(ts_col)) if ts_col else F.lit(0).cast("long")
-
-
-def _data_map(cols: list[str], double_col: str | None = None) -> Column:
-    # Built as ONE parsed SQL expression, not 2×len(cols) Column
-    # objects: every F.lit/F.col/cast is a Py4J round trip, and the
-    # changelog synthesis calls this for every (table, change-type)
-    # pair — the expr string parses JVM-side in a single trip, which
-    # measurably cuts driver-side plan-construction latency.
-    kv = ", ".join(
-        f"'{c}', CAST({c} * 2 AS STRING)" if c == double_col
-        else f"'{c}', CAST({c} AS STRING)"
-        for c in cols
-    )
-    return F.expr(f"map({kv})")
-
-
-def to_change_rows(snapshot: DataFrame, table: str, key_col: str,
-                   ts_col: str | None, database: str = "gmall") -> DataFrame:
-    """Wrap a batch snapshot as bootstrap-insert change rows: every
-    column stringified into the `data` map — the shape
-    DimApp.java:184-188 accepts during the initial snapshot phase."""
-    return snapshot.select(
-        F.lit(database).alias("database"),
-        F.lit(table).alias("table"),
-        F.lit("bootstrap-insert").alias("type"),
-        _base_ts(ts_col).alias("ts"),
-        _data_map(snapshot.columns).alias("data"),
-        F.lit(None).cast("map<string,string>").alias("old"),
-    )
-
-
-def synthesize_updates(snapshot: DataFrame, table: str, key_col: str,
-                       ts_col: str | None, update_col: str,
-                       fraction_bps: int = 500,
-                       database: str = "gmall") -> DataFrame:
-    """Deterministically re-emit a fraction of rows as `update` change
-    rows with a changed `update_col` and an `old` map — the pattern
-    FIXTURES.md §4 describes for exercising upsert/retraction. The
-    selection is `key % 10000 < bps` — no randomness and trivially
-    re-expressible in the oracle SQL, so golden tests stay stable."""
-    picked = snapshot.filter(
-        F.pmod(F.col(key_col).cast("long"), F.lit(10_000)) < F.lit(fraction_bps)
-    )
-    return picked.select(
-        F.lit(database).alias("database"),
-        F.lit(table).alias("table"),
-        F.lit("update").alias("type"),
-        (_base_ts(ts_col) + F.lit(1)).alias("ts"),
-        _data_map(snapshot.columns, double_col=update_col).alias("data"),
-        F.create_map(F.lit(update_col), F.col(update_col).cast("string")).alias("old"),
-    )
-
-
-def synthesize_deletes(snapshot: DataFrame, table: str, key_col: str,
-                       ts_col: str | None,
-                       database: str = "gmall") -> DataFrame:
-    """Deterministic `delete` change rows (`key % 1000 == 7`), carrying
-    the deleted row's post-image like Maxwell does — the K6 delete
-    path (DimHBaseSinkFunction.java:53-62: op 'delete' → HBase Delete,
-    others → Put)."""
-    picked = snapshot.filter(
-        F.pmod(F.col(key_col).cast("long"), F.lit(DELETE_MOD)) == F.lit(DELETE_RESIDUE)
-    )
-    return picked.select(
-        F.lit(database).alias("database"),
-        F.lit(table).alias("table"),
-        F.lit("delete").alias("type"),
-        (_base_ts(ts_col) + F.lit(2)).alias("ts"),
-        _data_map(snapshot.columns).alias("data"),
-        F.lit(None).cast("map<string,string>").alias("old"),
-    )
 
 
 def changelog(snapshot: DataFrame, table: str, key_col: str, ts_col: str | None,
@@ -115,13 +38,15 @@ def changelog(snapshot: DataFrame, table: str, key_col: str, ts_col: str | None,
     emits per row an array of candidate change structs — bootstrap
     always, update/delete only when the key arithmetic selects the
     row (NULL otherwise) — then explodes and drops the NULLs. Same
-    rows, same values as the branch form (the per-branch helpers
-    above stay as the unit-testable spec); at 100 TB this turns three
-    fact-table scans into one."""
+    rows, same values as the three-branch union; at 100 TB this turns
+    three fact-table scans into one.
+
+    Dimension tables carry no event time (HBase dims are pure KV,
+    HBaseUtil.java:80-103): with `ts_col=None` the clock starts at 0."""
     # The whole variant array is ONE parsed SQL expression (a few
     # hundred F.lit/F.struct/F.when Column round trips otherwise —
     # measurable driver latency when several tables synthesize per
-    # query). Semantics identical to the per-branch helpers above.
+    # query).
     cols = snapshot.columns
     base_sql = f"unix_timestamp({ts_col})" if ts_col else "CAST(0 AS BIGINT)"
     key_sql = f"CAST({key_col} AS BIGINT)"

@@ -73,11 +73,3 @@ def file_stream(spark: SparkSession, path: str, schema: T.StructType,
     trigger(availableNow=True) this gives deterministic batch parity —
     our substitute for the reference's manual topic replays."""
     return spark.readStream.format(fmt).schema(schema).load(path)
-
-
-def rate_source(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
-    )

@@ -310,8 +310,8 @@ def synthetic_order_wide(spark: SparkSession, n_orders: int,
     """One side of the 4-way order-wide chain (J1,
     DwdTradeOrderDetail.java:68-92 shape) at a chosen order
     cardinality — the input family for the round-7 scaling row on
-    plans/round6.stream_order_wide_join, which until now was the one
-    stream measured only at sf0.1.
+    plans/streaming_queries.stream_order_wide_join, which until now
+    was the one stream measured only at sf0.1.
 
     One detail row per order (id = order_id = oid), orders spread
     evenly over one day; the order side shares the detail timestamp

@@ -246,7 +246,7 @@ def additive_merge_batch(table_dir: str, keys: Sequence[str],
 def mg_merge_batch(state_dir: str, k: int, token_col: str = "token",
                    fault=None):
     """Streaming Misra-Gries maintenance sink — the keyed-state form of
-    plans/round7.heavy_hitters_exact's pass 1: each micro-batch is
+    plans/quantstats.heavy_hitters_exact's pass 1: each micro-batch is
     reduced to per-partition capacity-k MG summaries (one mapInPandas
     scan, O(k) state per partition) plus an exact per-partition row
     count, and the collected partials (≤ (k+1)·partitions rows —

@@ -236,7 +236,7 @@ def main() -> int:
         if want("simhash_recall"):
             # Round-9 VERDICT stretch: the simhash_fast_recall_gate's
             # certificate (recall vs exact Jaccard truth, the
-            # plans/round8.py computation verbatim) as a CURVE over
+            # plans/datapipe.py computation verbatim) as a CURVE over
             # corpus size instead of two SF spot checks. Recorded
             # rows = recall in basis points (10000 = 1.0); sec = the
             # full truth+fast+join compute.
@@ -271,7 +271,7 @@ def main() -> int:
             # 3-micro-batch stream and is gated against index + earlier
             # arrivals. A shim dir aliases the staged corpus under the
             # table name the registry entry reads.
-            from realtime_data_warehouse_spark.plans.round6b import (
+            from realtime_data_warehouse_spark.plans.streaming_queries import (
                 stream_neardup_gate,
             )
             shim = os.path.join(STAGE_ROOT, f"shim_docs_{n}")
@@ -873,7 +873,7 @@ def main() -> int:
     # The round-6 verdict's top item: stream_order_wide_join (J1 as a
     # stream — 3 stateful hops, 2 outer) was the one stream family
     # without a measured curve. Same chain shape as the registry entry
-    # (plans/round6.py), inputs from synthetic_order_wide so the
+    # (plans/streaming_queries.py), inputs from synthetic_order_wide so the
     # expected output is EXACT at every size: n rows, ⌈n/7⌉ activity
     # matches, ⌈n/11⌉ coupon matches — asserted per drain.
     ow_sizes = [30_000, 100_000] if quick else [30_000, 100_000, 300_000]

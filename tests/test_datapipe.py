@@ -292,7 +292,7 @@ def test_heavy_hitters_exact_equals_full_groupby(spark, sf_small):
     from pyspark.sql import functions as F
 
     from realtime_data_warehouse_spark.functions.tokenize import tokenize
-    from realtime_data_warehouse_spark.plans.round7 import (
+    from realtime_data_warehouse_spark.plans.quantstats import (
         _HH_K,
         heavy_hitters_exact,
     )

@@ -386,7 +386,10 @@ def test_zorder_table_prunes_on_both_columns(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from realtime_data_warehouse_spark.operators.maintenance import zorder_table
+    from realtime_data_warehouse_spark.operators.maintenance import (
+        table_bytes,
+        zorder_table,
+    )
 
     # two independent uniform dimensions
     n = 200_000
@@ -415,7 +418,10 @@ def test_zorder_table_prunes_on_both_columns(spark, tmp_path):
     # z-ordered on (x, y)
     zd = str(tmp_path / "zorder")
     base.write.parquet(zd)
-    zorder_table(spark, zd, ["x", "y"], target_file_bytes=1, bits_per_col=8)
+    # a few hundred files: enough row groups for the pruning ratios to
+    # mean something, without one file per Morton code
+    zorder_table(spark, zd, ["x", "y"],
+                 target_file_bytes=table_bytes(zd) // 256, bits_per_col=8)
 
     before = {(r.x, r.y, r.payload) for r in base.collect()}
     after = {(r.x, r.y, r.payload) for r in spark.read.parquet(zd).collect()}
@@ -554,6 +560,67 @@ def test_two_pass_exact_quantile_matches_sort(spark):
             df, "x", qs, ["g"], 32, bounds, per_group).collect()
     }
     assert got_staged == got_multi
+
+
+def test_two_pass_exact_quantile_empty_and_all_null_groups(spark):
+    """A group with no non-null value has no quantile, and neither has
+    an empty input: both yield no rows (DuckDB quantile_disc returns
+    NULL there; an absent row is the two-pass operator's form)."""
+    from realtime_data_warehouse_spark.operators.agg import (
+        two_pass_exact_quantile,
+    )
+
+    df = spark.createDataFrame(
+        [("a", float(i)) for i in range(1, 6)] + [("b", None)] * 3,
+        "g string, x double")
+    got = two_pass_exact_quantile(df, "x", [0.5], keys=["g"]).collect()
+    assert [(r["g"], r["x_q"]) for r in got] == [("a", 3.0)]
+    only_null = df.filter(F.col("g") == "b")
+    assert two_pass_exact_quantile(
+        only_null, "x", [0.5], keys=["g"]).collect() == []
+    assert two_pass_exact_quantile(df.limit(0), "x", [0.5]).collect() == []
+    assert two_pass_exact_quantile(df.limit(0), "x", 0.5).collect() == []
+
+
+def test_two_pass_exact_quantile_ignores_nulls(spark):
+    """NULLs carry no rank, as in DuckDB quantile_disc: q=1.0 over
+    1..10 plus five NULLs is 10.0 (the NULLs must not land in the top
+    bucket and sort ahead of the maximum)."""
+    from realtime_data_warehouse_spark.operators.agg import (
+        two_pass_exact_quantile,
+    )
+
+    df = spark.createDataFrame(
+        [(float(i),) for i in range(1, 11)] + [(None,)] * 5, "x double")
+    got = two_pass_exact_quantile(df, "x", [1.0]).collect()
+    assert [(r["q"], r["x_q"]) for r in got] == [(1.0, 10.0)]
+    assert two_pass_exact_quantile(df, "x", 1.0).collect()[0]["x_q"] == 10.0
+
+
+def test_maintain_table_reads_split_size_with_unit_suffix(
+        spark, tmp_path, monkeypatch):
+    """maintain_table sizes files by the session's
+    spark.sql.files.maxPartitionBytes, which may carry a unit suffix:
+    `256m` is 268435456 bytes, not a parse failure."""
+    from realtime_data_warehouse_spark.operators import maintenance
+
+    seen = []
+
+    def spy(table_dir, parallelism, target_split_bytes, min_file_bytes):
+        seen.append(target_split_bytes)
+        return False
+
+    monkeypatch.setattr(maintenance, "needs_compaction", spy)
+    t = str(tmp_path / "t")
+    spark.range(0, 10).write.parquet(t)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "256m")
+    try:
+        assert maintenance.maintain_table(spark, t, parallelism=2) == 0
+    finally:
+        spark.conf.set(key, old)
+    assert seen == [268435456]
 
 
 def test_gapfill_interp_linear_and_edge_fallback(spark):

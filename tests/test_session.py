@@ -1,9 +1,12 @@
-"""Session sizing helpers; none of these start a JVM."""
+"""Session sizing helpers and the tuned session's settings."""
 from __future__ import annotations
 
 import os
 
-from realtime_data_warehouse_spark.session import default_driver_memory
+from realtime_data_warehouse_spark.session import (
+    RETAINED_SQL_EXECUTIONS,
+    default_driver_memory,
+)
 
 _UNITS = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
 
@@ -25,3 +28,8 @@ def test_default_driver_memory_fits_the_host(monkeypatch):
 def test_default_driver_memory_env_override_is_verbatim(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert default_driver_memory() == "3g"
+
+
+def test_sql_execution_retention_is_capped(spark):
+    key = "spark.sql.ui.retainedExecutions"
+    assert int(spark.conf.get(key)) == RETAINED_SQL_EXECUTIONS < 1000

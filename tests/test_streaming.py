@@ -755,7 +755,9 @@ def test_neardup_gate_rejects_across_batches(spark, tmp_path):
     batch's arrival, itself accepted) — only the appended seen index
     can reject it. Also pins the verdict taxonomy: corpus match beats
     earlier-arrival match; an unshingleable doc is accepted."""
-    from realtime_data_warehouse_spark.plans.round6b import stream_neardup_gate
+    from realtime_data_warehouse_spark.plans.streaming_queries import (
+        stream_neardup_gate,
+    )
 
     a = "the quick brown fox jumps over the lazy dog again and again"
     c = "completely different words about spark streaming state stores"
