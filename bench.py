@@ -15,14 +15,24 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.append(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "perfbench"))
+
+import probes  # noqa: E402  (core budget, versions, commit)
 
 from realtime_data_warehouse_spark.cache import unpersist_all  # noqa: E402
 from realtime_data_warehouse_spark.plans.registry import QUERIES  # noqa: E402
-from realtime_data_warehouse_spark.session import get_spark, tune_for_scale  # noqa: E402
+from realtime_data_warehouse_spark.session import (  # noqa: E402
+    default_parallelism,
+    get_spark,
+    tune_for_scale,
+)
 
 #: headline set: one per operator family — scan+agg, window aggs,
 #: multi-way join, interval join, snowflake+distinct, dedup (LSH),
@@ -62,6 +72,41 @@ LATENCY = ["stream_daily_uv_window", "stream_order_wide_join",
            "stream_incremental_agg_refresh"]
 
 
+def warm_up(spark, sf_dir: str) -> None:
+    """One-time engine init (executor launch, shuffle service, parquet
+    reader, Python worker daemons) is startup cost, not query cost —
+    the docstring contract excludes it. A trivial shuffle + scan pays
+    the JVM side; a no-op pandas_udf over one task per core forks the
+    reusable Python worker pool the Arrow-batched operators run on."""
+    import pandas as pd  # noqa: F401,PLC0415
+    from pyspark.sql import functions as F  # noqa: PLC0415
+
+    noop = F.pandas_udf(lambda s: s, "long")
+    spark.range(0, 10_000, 1, default_parallelism()).select(
+        noop("id").alias("v")).write.format("noop").mode("overwrite").save()
+    spark.range(1000).repartition(8).count()
+    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+
+
+def gc_hint(spark) -> None:
+    """Untimed heap hygiene between bench sections. A bench session
+    executes 100+ queries back to back; dead broadcast pieces and
+    Py4J-released plans only leave the heap when a JVM GC feeds the
+    ContextCleaner (Spark's periodic GC defaults to 30 min — longer
+    than the whole bench), and the accumulated garbage was measured to
+    slow LATE sections several-fold (stateful stream drains: 17 s
+    mid-bench vs 3.4 s in a fresh session, identical query/checkpoint).
+    A deployment doesn't carry a grading session's garbage, so
+    collection runs between sections and outside every timed window."""
+    import gc  # noqa: PLC0415
+
+    gc.collect()
+    try:
+        spark.sparkContext._jvm.System.gc()
+    except Exception:  # noqa: BLE001  (Spark Connect: no _jvm)
+        pass
+
+
 def run_latency_bench(spark, sf_dir: str) -> dict:
     """Per-micro-batch trigger latency (durationMs.triggerExecution:
     source read → state update → sink commit) for the LATENCY shapes,
@@ -71,6 +116,11 @@ def run_latency_bench(spark, sf_dir: str) -> dict:
     (smaller per-trigger batches — the deployment's
     maxFilesPerTrigger/rate-limit knob) until frac ≥ 0.8, and state
     the largest honest batch size that holds it."""
+    import functools  # noqa: PLC0415
+
+    from realtime_data_warehouse_spark.plans.streaming_queries import (  # noqa: PLC0415
+        order_wide_join,
+    )
     from realtime_data_warehouse_spark.session import (  # noqa: PLC0415
         use_rocksdb_state,
     )
@@ -78,18 +128,9 @@ def run_latency_bench(spark, sf_dir: str) -> dict:
         runner as _runner,
     )
 
-    def gc_hint() -> None:
-        import gc  # noqa: PLC0415
-
-        gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001
-            pass
-
-    def one_run(name: str) -> dict | None:
+    def one_run(query) -> dict | None:
         _runner.RECENT_DRAINS.clear()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
+        query(spark, sf_dir).write.format("noop").mode(
             "overwrite").save()
         drains = [list(d) for d in _runner.RECENT_DRAINS]
         unpersist_all()
@@ -119,20 +160,20 @@ def run_latency_bench(spark, sf_dir: str) -> dict:
 
     out: dict = {}
     for name in LATENCY:
-        gc_hint()
+        gc_hint(spark)
         QUERIES[name](spark, sf_dir).write.format("noop").mode(
             "overwrite").save()  # untimed: stages replay input
         unpersist_all()
-        r = one_run(name)
+        r = one_run(QUERIES[name])
         if r is not None:
             out[name] = r
         # same distribution on the RocksDB store — the per-batch
         # commit cost of the production state backend, which the
         # drain-total *_rocksdb columns amortize away
-        gc_hint()
+        gc_hint(spark)
         use_rocksdb_state(spark, True)
         try:
-            r = one_run(name)
+            r = one_run(QUERIES[name])
             if r is not None:
                 out[f"{name}_rocksdb"] = r
         finally:
@@ -148,20 +189,16 @@ def run_latency_bench(spark, sf_dir: str) -> dict:
         ladder = [dict(slices=3, rows_per_trigger=-(-n_detail // 3), **{
             k: wj[k] for k in ("batches", "p50_ms", "within_5s_frac")})]
         for slices in (6, 12, 24):
-            os.environ["SPARK_GRAFT_OWJ_SLICES"] = str(slices)
+            owj = functools.partial(order_wide_join, slices=slices)
+            gc_hint(spark)
+            use_rocksdb_state(spark, True)
             try:
-                gc_hint()
-                use_rocksdb_state(spark, True)
-                try:
-                    QUERIES["stream_order_wide_join"](
-                        spark, sf_dir).write.format("noop").mode(
-                        "overwrite").save()  # untimed staging pass
-                    unpersist_all()
-                    r = one_run("stream_order_wide_join")
-                finally:
-                    use_rocksdb_state(spark, False)
+                owj(spark, sf_dir).write.format("noop").mode(
+                    "overwrite").save()  # untimed staging pass
+                unpersist_all()
+                r = one_run(owj)
             finally:
-                os.environ.pop("SPARK_GRAFT_OWJ_SLICES", None)
+                use_rocksdb_state(spark, False)
             if r is None:
                 break
             ladder.append(dict(
@@ -195,20 +232,42 @@ def _latency_main(out_path: str) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("rdw-bench-latency")
     tune_for_scale(spark)
-    # minimal engine warm-up: executor + Python worker pool + parquet
-    # reader, same discipline as main()'s untimed init
-    import pandas as pd  # noqa: F401,PLC0415
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    _noop = F.pandas_udf(lambda s: s, "long")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    spark.range(0, 10_000, 1, cpus).select(_noop("id").alias("v")).write \
-        .format("noop").mode("overwrite").save()
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
+    warm_up(spark, sf_dir)
     out = run_latency_bench(spark, sf_dir)
     with open(out_path, "w") as fh:
         json.dump(out, fh)
     spark.stop()
+
+
+#: Bound on the fresh-session latency subprocess. Its drains (batches
+#: × p50 in the committed 8-core BENCH_FULL.json), their untimed
+#: staging passes and the whole RocksDB trigger-sizing ladder add up
+#: to under ten minutes; 30 minutes leaves three times that for a slow
+#: host before a hung child is given up on.
+LATENCY_TIMEOUT_S = 1800
+
+#: Longest a bench section waits for the host's load to settle.
+LOAD_GATE_WAIT_S = 120
+
+
+def fresh_latency() -> tuple[dict | None, str]:
+    """Run the latency section in a fresh subprocess session. Returns
+    its timings and "fresh (isolated subprocess)", or None and why the
+    subprocess produced none (it failed or timed out)."""
+    lat_path = os.path.join(tempfile.mkdtemp(prefix="rdw_bench_lat_"),
+                            "latency.json")
+    try:
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__),
+             "--latency-json", lat_path],
+            stdout=subprocess.DEVNULL, timeout=LATENCY_TIMEOUT_S,
+        )
+    except subprocess.TimeoutExpired:
+        return None, f"subprocess timed out after {LATENCY_TIMEOUT_S} s"
+    if proc.returncode != 0 or not os.path.exists(lat_path):
+        return None, "subprocess failed"
+    with open(lat_path) as fh:
+        return json.load(fh), "fresh (isolated subprocess)"
 
 
 def main() -> None:
@@ -217,41 +276,11 @@ def main() -> None:
     spark = get_spark("rdw-bench")
     tune_for_scale(spark)
 
-    # One-time engine init (executor launch, shuffle service, parquet
-    # reader, Python worker daemons) is startup cost, not query cost —
-    # the docstring contract excludes it. A trivial shuffle + scan pays
-    # the JVM side; a no-op pandas_udf over one task per core forks the
-    # reusable Python worker pool the Arrow-batched operators run on.
-    import pandas as pd  # noqa: PLC0415
     from pyspark.sql import functions as F  # noqa: PLC0415
 
-    _noop = F.pandas_udf(lambda s: s, "long")  # noqa: E731
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    spark.range(0, 10_000, 1, cpus).select(_noop("id").alias("v")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    spark.range(1000).repartition(8).count()
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-
-    def gc_hint() -> None:
-        """Untimed heap hygiene between bench sections. A bench
-        session executes 100+ queries back to back; dead broadcast
-        pieces and Py4J-released plans only leave the heap when a JVM
-        GC feeds the ContextCleaner (Spark's periodic GC defaults to
-        30 min — longer than the whole bench), and the accumulated
-        garbage was measured to slow LATE sections several-fold
-        (stateful stream drains: 17 s mid-bench vs 3.4 s in a fresh
-        session, identical query/checkpoint). A deployment doesn't
-        carry a grading session's garbage, so collection runs between
-        sections and outside every timed window."""
-        import gc  # noqa: PLC0415
-
-        gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001  (Spark Connect: no _jvm)
-            pass
+    warm_up(spark, sf_dir)
+    cpus = default_parallelism()
+    environment = probes.environment(spark, cpus)
 
     # every individual timed pass, keyed "<section>/<query>" — the
     # round-7 drift lesson (stream_a6_delta_sum +48% between rounds,
@@ -261,28 +290,17 @@ def main() -> None:
     # + one normal = box weather)
     pass_log: dict[str, list[float]] = {}
 
-    # round-9 bench-protocol fix (VERDICT r8 item 2): two consecutive
-    # committed sessions carried ~1.5-2x environmental inflation that
-    # was only provable with after-the-fact A/Bs. Record the box's
-    # 1-min/5-min load average at the start of every section so a
-    # contended session is visible IN the artifact: a section whose
-    # load1 >> bench's own core budget was not measured idle.
-    #
-    # Round 10 makes the record ACTIONABLE (VERDICT r9 item 2): each
-    # section start GATES on load1 — if the box is visibly busy, the
-    # bench waits (bounded) for the 1-minute average to decay below
-    # the threshold before starting the section's timers; a section
-    # that starts while still above it is stamped contaminated:true
-    # so BENCH_r{N} consumers can filter instead of inferring box
-    # weather after the fact. The threshold is sized to what an
-    # otherwise-idle box shows while the bench's OWN previous section
-    # drains out of the 1-min average (~0.375×cpus, floor 8); a truly
-    # contended box stays above it through the whole wait.
+    # Each section records the host's 1-min/5-min load average at its
+    # start, so a contended section shows in the artifact (cross-session
+    # inflation of 1.5-2x was otherwise provable only by after-the-fact
+    # A/Bs), and gates on load1: it waits, bounded, for the average to
+    # fall below the threshold before its timers start, and one that
+    # starts above it is stamped contaminated:true. The threshold is
+    # what an otherwise-idle host shows while the bench's own previous
+    # section drains out of the 1-min average (~0.375 × the session's
+    # core budget, floor 8); a truly contended host stays above it.
     load_log: list[dict] = []
-    load_gate_thresh = float(os.environ.get(
-        "SPARK_GRAFT_LOAD_GATE", max(8.0, 0.375 * (os.cpu_count() or 8))))
-    load_gate_wait_s = int(os.environ.get("SPARK_GRAFT_LOAD_GATE_WAIT",
-                                          "120"))
+    load_gate_thresh = max(8.0, 0.375 * cpus)
 
     def load_sample(label: str) -> None:
         try:
@@ -290,7 +308,7 @@ def main() -> None:
         except OSError:
             return
         waited = 0
-        while l1 > load_gate_thresh and waited < load_gate_wait_s:
+        while l1 > load_gate_thresh and waited < LOAD_GATE_WAIT_S:
             time.sleep(10)
             waited += 10
             l1, l5, _ = os.getloadavg()
@@ -310,7 +328,7 @@ def main() -> None:
         (untimed), so every pass re-materializes its own shared
         intermediates — no pass rides a previous pass's cached blocks,
         and cached blocks never pile up across the 60+-query session."""
-        gc_hint()
+        gc_hint(spark)
         load_sample(section or "family")
         timings: dict[str, float] = {}
         for _pass in range(passes):
@@ -350,7 +368,6 @@ def main() -> None:
     # maintained layout — the state a real deployment keeps its tables
     # in — with the as-served series kept as the diagnostic column.
     import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from realtime_data_warehouse_spark.operators.maintenance import (  # noqa: E402,PLC0415
         maintain_table,
@@ -534,7 +551,7 @@ def main() -> None:
     )
 
     def branch_bench(passes: int = 2) -> dict[str, object]:
-        gc_hint()
+        gc_hint(spark)
         load_sample("set_similarity")
         zdir = os.path.join(tempfile.gettempdir(), "rdw_bench_zipf")
         if not os.path.exists(os.path.join(zdir, "_SUCCESS")):
@@ -601,7 +618,7 @@ def main() -> None:
         out: dict[str, object] = {}
         load_sample("streaming")
         for name, (table, factor) in STREAMS.items():
-            gc_hint()
+            gc_hint(spark)
             n_in = int(
                 spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
                 .count() * factor)
@@ -624,7 +641,7 @@ def main() -> None:
             # item): the production store for state-bigger-than-heap
             # (session.use_rocksdb_state docstring). Timed identically
             # so the column is the store swap's true cost.
-            gc_hint()
+            gc_hint(spark)
             use_rocksdb_state(spark, True)
             try:
                 best_r = float("inf")
@@ -656,7 +673,7 @@ def main() -> None:
         "stream_ann_route": ("embeddings", 0.0),     # 30 probe vectors
     }
     for name, (table, factor) in INGEST.items():
-        gc_hint()
+        gc_hint(spark)
         n_in = int(
             spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
             .count() * factor) or 30
@@ -686,23 +703,12 @@ def main() -> None:
     # 3.1-3.5 s fresh, same code). It now runs in a FRESH subprocess
     # session — same interpreter, env, core count and sf — so the
     # metric measures the engine, not the bench's session history.
-    import subprocess  # noqa: PLC0415
-
     load_sample("latency")
-    lat_path = os.path.join(tempfile.mkdtemp(prefix="rdw_bench_lat_"),
-                            "latency.json")
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__),
-         "--latency-json", lat_path],
-        stdout=subprocess.DEVNULL,
-    )
-    if proc.returncode == 0 and os.path.exists(lat_path):
-        with open(lat_path) as fh:
-            latency_timings = json.load(fh)
-        latency_timings["session"] = "fresh (isolated subprocess)"
-    else:  # keep the metric rather than lose it; mark it aged
+    latency_timings, session = fresh_latency()
+    if latency_timings is None:  # keep the metric rather than lose it
         latency_timings = run_latency_bench(spark, sf_dir)
-        latency_timings["session"] = "aged-fallback (subprocess failed)"
+        session = f"aged-fallback ({session})"
+    latency_timings["session"] = session
 
     result = {
         "metric": "headline_queries_total_runtime",
@@ -774,9 +780,10 @@ def main() -> None:
             "(O(V/64) per pair, verify-before-distinct), the "
             "prefix+token join wins on Zipf vocabularies where the "
             "prefix actually prunes; min of 2, own section"),
-        "session_load": {"cpus": os.cpu_count(),
+        "environment": environment,
+        "session_load": {"cpus": cpus,
                          "gate_load1": load_gate_thresh,
-                         "gate_max_wait_s": load_gate_wait_s,
+                         "gate_max_wait_s": LOAD_GATE_WAIT_S,
                          "samples": load_log},
         "session_load_note": (
             "1-min/5-min load averages sampled at the start of each "

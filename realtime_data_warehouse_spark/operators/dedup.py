@@ -451,12 +451,13 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     candidate join scales like LSH (bucket-local).
 
     Persist policy (r13, VERDICT r12 item 6 — interleaved min-of-5
-    A/B in scripts/r13_ab/ab_minhash_persist.py): persist the NARROW
-    banded keys (id, band_idx, band_key — 32 longs/doc, the output of
-    the expensive Arrow-batched signature pass), NOT the wide shingle
-    arrays. The two verify sides re-derive shingles from the raw text
-    (one codegen'd tokenize+concat projection each) instead of
-    reading wide cached arrays: 1.395 s/10 jobs (wide persist, the
+    A/B in scripts/r13_ab/ab_minhash_persist.py at commit a0c4aa8):
+    persist the NARROW banded keys (id, band_idx, band_key — 32
+    longs/doc, the output of the expensive Arrow-batched signature
+    pass), NOT the wide shingle arrays. The two verify sides
+    re-derive shingles from the raw text (one codegen'd
+    tokenize+concat projection each) instead of reading wide cached
+    arrays: 1.395 s/10 jobs (wide persist, the
     r12 form) → 1.172 s/8 jobs (narrow), with persist-everything-
     recompute-nothing and recompute-everything both slower. At 100 TB
     the narrow persist is the analogue of staging the signature/band
@@ -530,9 +531,9 @@ def minhash_lsh_join(left_sh: DataFrame, right_sh: DataFrame,
     SPLITS of one corpus (decontaminate_neardup) band the corpus once
     and pass the persisted slices, so the expensive Arrow-batched
     signature pass runs once, not once per side (interleaved A/B in
-    scripts/r13_ab/ab_decontam_persist.py: wide-shingle persist
-    1.424 s vs shared-narrow-bands 1.258 s, narrow wins all 5
-    pairwise passes)."""
+    scripts/r13_ab/ab_decontam_persist.py at commit a0c4aa8:
+    wide-shingle persist 1.424 s vs shared-narrow-bands 1.258 s,
+    narrow wins all 5 pairwise passes)."""
     bl = left_bands if left_bands is not None else band_keys(
         left_sh.select(F.col(left_id).alias("__id"), "shingles"),
         "__id").select(F.col("__id").alias(left_id), "band_idx",
@@ -956,7 +957,8 @@ def containment_join(df: DataFrame, id_col: str = "doc_id",
             )
         )
         # r13 (guide §8 "audit how the proxy gets re-attached" +
-        # §3.1, measured in scripts/r13_ab/ab_containment_verify.py):
+        # §3.1, measured in scripts/r13_ab/ab_containment_verify.py
+        # at commit a0c4aa8):
         # left to AQE, the two mask-attach joins planned as SORT-MERGE
         # and shuffled the multi-million-row candidate stream twice
         # (by inner_id, then outer_id) just to fetch 15-word masks —

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from ..operators.agg import tumble
 from ..operators.joins import snowflake_join
 from ..operators.state import (
-    daily_first_event,
     first_visit_repair,
     latest_per_key,
     new_vs_returning,

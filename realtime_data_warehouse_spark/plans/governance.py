@@ -410,13 +410,13 @@ def decontaminate_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays first-class as fuzzy_join_parts.
 
     r13 persist shape (same move as minhash_lsh_pairs, interleaved
-    A/B in scripts/r13_ab/ab_decontam_persist.py — wide 1.424 s vs
-    narrow 1.258 s, narrow wins all 5 pairwise passes): persist the
-    NARROW banded keys of the whole corpus ONCE and split the bands
-    by cohort, so the Arrow-batched signature pass runs once (not
-    once per side) and nothing wide sits in storage; the two verify
-    sides re-derive shingles from the raw text (codegen'd
-    projections)."""
+    A/B in scripts/r13_ab/ab_decontam_persist.py at commit a0c4aa8 —
+    wide 1.424 s vs narrow 1.258 s, narrow wins all 5 pairwise
+    passes): persist the NARROW banded keys of the whole corpus ONCE
+    and split the bands by cohort, so the Arrow-batched signature
+    pass runs once (not once per side) and nothing wide sits in
+    storage; the two verify sides re-derive shingles from the raw
+    text (codegen'd projections)."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     sh = D.with_shingles(docs.select("doc_id", "text"), "text", 2,
                          drop_empty=True).select("doc_id", "shingles")

@@ -749,6 +749,22 @@ def test_rocksdb_state_store_same_output(spark, sf_small, tmp_path):
     assert rocks_rows == default_rows
 
 
+def test_order_wide_join_rows_do_not_depend_on_slices(spark, sf_small):
+    """bench.py's trigger-sizing ladder re-stages the 4-way join chain
+    at more, smaller micro-batches and reads only latency off it; that
+    holds only if the slice count leaves the output unchanged."""
+    from realtime_data_warehouse_spark.plans.streaming_queries import (
+        order_wide_join,
+    )
+
+    def rows(slices: int):
+        df = order_wide_join(spark, sf_small, slices=slices)
+        return sorted(map(tuple, df.collect()))
+
+    three = rows(3)
+    assert three and rows(6) == three
+
+
 def test_neardup_gate_rejects_across_batches(spark, tmp_path):
     """stream_neardup_gate's seen-index must grow across micro-batches:
     doc 30 arrives in the LAST batch and duplicates doc 20 (an earlier
